@@ -38,10 +38,13 @@ def _current_round() -> int:
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env:
         return int(env)
-    rounds = [
-        int(re.search(r"_r(\d+)\.json$", p).group(1))
+    # per-query side files (BENCH_r13_c8.json) share the glob but
+    # carry no round of their own
+    matches = (
+        re.search(r"_r(\d+)\.json$", p)
         for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-    ]
+    )
+    rounds = [int(m.group(1)) for m in matches if m]
     return (max(rounds) + 1) if rounds else 1
 
 # Headline set: one per operator family, weighted toward the

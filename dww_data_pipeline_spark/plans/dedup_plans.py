@@ -2854,9 +2854,10 @@ def graph_ann_walk(
 ) -> DataFrame:
     """The s21 core over any (vec_id, embedding[, bucket]) relation and
     (src, dst) edge list — factored for property testing against a
-    pure-Python walk. The beam is localCheckpoint-materialized between
-    rounds (O(|q| x beam) rows — bounded) so the iterative lineage
-    stays flat instead of compounding per round.
+    pure-Python walk. Between rounds the beam (O(|q| x beam) rows —
+    bounded) is collected to the driver and re-enters the next round
+    as a local table through ``local_rows_df``, so the iterative
+    lineage stays flat instead of compounding per round.
 
     ``seeds`` (query_id, vec_id) overrides the default global
     MIN(vec_id) entry vertex — how s22's HNSW descent chains layers:

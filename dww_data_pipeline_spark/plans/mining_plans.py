@@ -1170,53 +1170,16 @@ def t25_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dww_data_pipeline_spark.plans.pipeline_ext2 import (
         _bpe_train_segmentation,
     )
+    from dww_data_pipeline_spark.sources.tokenizer_store import (
+        fertility_report,
+    )
 
     _, seg = _bpe_train_segmentation(spark, sf_dir)
     nsym = seg.select(
         "tok",
         F.size(F.split(F.trim(F.col("seg")), " ")).cast("long").alias("n_sym"),
     )
-    d = load_table(spark, sf_dir, "documents")
-    base = d.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length("text")).alias("sum_chars"),
-        F.sum(F.size(spark_tokens(F.col("text")))).alias("sum_ws_tokens"),
-    )
-    bpe = (
-        d.select(
-            "source", "lang", F.explode(spark_tokens(F.col("text"))).alias("tok")
-        )
-        .join(F.broadcast(nsym), "tok")
-        .groupBy("source", "lang")
-        .agg(F.sum("n_sym").alias("sum_bpe_tokens"))
-    )
-    # left join: a (source, lang) group whose documents contain zero
-    # tokens must stay visible (sum_bpe_tokens = 0, null fertility)
-    # rather than vanish from the report (round-9 advice)
-    bpe_sum = F.coalesce(F.col("sum_bpe_tokens"), F.lit(0).cast("long"))
-    return base.join(bpe, ["source", "lang"], "left").select(
-        "source",
-        "lang",
-        "n_docs",
-        "sum_chars",
-        "sum_ws_tokens",
-        bpe_sum.alias("sum_bpe_tokens"),
-        F.when(
-            F.col("sum_ws_tokens") > 0,
-            F.round(
-                F.col("sum_chars").cast("double")
-                / F.col("sum_ws_tokens").cast("double"),
-                6,
-            ),
-        ).alias("chars_per_ws_token"),
-        F.when(
-            bpe_sum > 0,
-            F.round(
-                F.col("sum_chars").cast("double") / bpe_sum.cast("double"),
-                6,
-            ),
-        ).alias("chars_per_bpe_token"),
-    )
+    return fertility_report(load_table(spark, sf_dir, "documents"), nsym)
 
 
 @register(
@@ -1227,8 +1190,9 @@ def t25_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "runs: the (tok, n_sym) table comes from the persisted tokenizer "
     "(sources/tokenizer_store.py, exactness inherited from the t36 "
     "parity gate) and BROADCASTS onto the exploded word stream; OOV "
-    "words encode on the fly with the loaded merge list (none here — "
-    "the store is trained on this corpus — but the path is live and "
+    "words encode with the loaded merge list, in the driver under the "
+    "BPE driver cap and with encode_words above it (none here — the "
+    "store is trained on this corpus — but both paths are live and "
     "pytest-pinned on novel words). The store is built at most once "
     "per (application, sf_dir) — the session memo stands in for the "
     "lake's pre-existing artifact, so every call after the first is "

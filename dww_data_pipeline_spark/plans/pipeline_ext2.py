@@ -3153,6 +3153,17 @@ _BPE_DRIVER_VOCAB_CAP = int(
 )
 
 
+def _collect_under_cap(df: DataFrame) -> list | None:
+    """Every row of the vocabulary-bounded ``df`` when it has at most
+    ``_BPE_DRIVER_VOCAB_CAP`` rows, else None.  The ``limit(cap + 1)``
+    guard is a no-op under the cap, so one collect returns the whole
+    frame.  Callers persist a corpus-scale ``df`` first, so their
+    above-cap path reuses what the probe computed."""
+    cap = _BPE_DRIVER_VOCAB_CAP
+    got = df.limit(cap + 1).collect()
+    return got if len(got) <= cap else None
+
+
 def _bpe_train_driver(
     rows: list, n_merges: int
 ) -> tuple[list[tuple[str, str, int]], list[tuple[str, int, str]]]:
@@ -3190,19 +3201,39 @@ def _bpe_train_driver(
         merged = " " + m + " "
         merges.append((pair, merged, counts[pair]))
         la, rb = pair.strip(" ").split(" ")
-        tail = " " + la + " "
-        cut = len(la) + 1
         for j, s in enumerate(segs):
-            if pair not in s:  # same exact-identity guard as the fold
-                continue
-            acc = " "
-            for x in s.strip(" ").split(" "):
-                if x == rb and acc.endswith(tail):
-                    acc = acc[:-cut] + m + " "
-                else:
-                    acc = acc + x + " "
-            segs[j] = acc
+            if pair in s:  # same exact-identity guard as the fold
+                segs[j] = _bpe_fold_driver(s, la, rb, m)
     return merges, list(zip(toks, ns, segs))
+
+
+def _bpe_fold_driver(seg: str, left: str, right: str, merged: str) -> str:
+    """Python twin of ``_bpe_apply_merge`` over one sentinel-space
+    segmentation: the same left-to-right fold (merge, then skip) on
+    code-point strings, shared by the driver trainer and the driver
+    encoder."""
+    tail = " " + left + " "
+    cut = len(left) + 1
+    acc = " "
+    for x in seg.strip(" ").split(" "):
+        if x == right and acc.endswith(tail):
+            acc = acc[:-cut] + merged + " "
+        else:
+            acc = acc + x + " "
+    return acc
+
+
+def _bpe_encode_driver(tok: str, merges: list[tuple[str, str]]) -> str:
+    """Python twin of ``sources.tokenizer_store.encode_words`` for one
+    word: character seg0, then each trimmed (pair, merged) merge in
+    rank order through ``_bpe_fold_driver``.  Returns the trimmed
+    segmentation."""
+    seg = " " + " ".join(tok) + " "
+    for pair, merged in merges:
+        if " " + pair + " " in seg:  # the trainer's identity guard
+            la, rb = pair.split(" ")
+            seg = _bpe_fold_driver(seg, la, rb, merged)
+    return seg.strip(" ")
 
 
 def _bpe_apply_merge(seg, left: str, right: str, merged: str):
@@ -3495,16 +3526,28 @@ _t35b_attach_oracle()
 # the loaded merges reproduces the trainer's final state.
 #
 # Scale shape: one t33 training run (the one corpus-histogram
-# shuffle), one vocabulary-bounded store write + read-back, 16
-# vocabulary-bounded encode folds, and vocabulary-bounded hash
-# aggregations; the store lands in a fresh mkdtemp dir deleted after
-# the bounded 5-row result materializes (the ext_orc_roundtrip
-# discipline — concurrent runs never race on a shared path).
+# shuffle), one vocabulary-bounded store write + read-back (pinned
+# schemas, the merge table read once), one corpus pass for the
+# vocabulary, and vocabulary-bounded hash aggregations.  The
+# re-encode leg runs the driver fold (_bpe_encode_driver, which the
+# s20 gate and t25b share and tests pin equal to encode_words) under
+# _BPE_DRIVER_VOCAB_CAP, and encode_words' 16 folds above it.  The
+# store lands in a fresh mkdtemp dir deleted after the bounded 5-row
+# result materializes (the ext_orc_roundtrip discipline — concurrent
+# runs never race on a shared path).
 # ---------------------------------------------------------------------------
 
 
 def _md5_32(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def _md5_32_driver(text: str) -> int:
+    """Python twin of ``_md5_32`` (hashlib md5 == Spark/DuckDB md5 over
+    the UTF-8 bytes)."""
+    import hashlib
+
+    return int(hashlib.md5(text.encode()).hexdigest()[:8], 16)
 
 
 def _t36_oracle() -> str:
@@ -3556,7 +3599,6 @@ SELECT 'segmentation_hash', CAST(SUM({h_seg}) AS BIGINT) FROM final"""
     "train->apply closure THROUGH the artifact",
 )
 def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import shutil
     import tempfile
 
@@ -3566,7 +3608,11 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     store = tempfile.mkdtemp(prefix="dww_tokstore_parity_")
     try:
         ts.build_tokenizer_store(d, store, n_merges=_BPE_TRAIN_MERGES)
-        merges = ts.load_merge_list(spark, store)
+        # bounded: n_merges rows, read once for the list and the hash
+        mrows = sorted(
+            ts.load_merge_table(spark, store).collect(), key=lambda r: r["step"]
+        )
+        merges = [(r["pair"], r["merged"]) for r in mrows]
         seg = ts.load_segmentation(spark, store)
         h_seg = _md5_32(F.concat_ws("|", "tok", "seg"))
         agg = seg.agg(
@@ -3574,21 +3620,30 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(F.col("n") * F.col("n_sym")).alias("corpus_bpe_tokens"),
             F.sum(h_seg).alias("segmentation_hash"),
         ).collect()[0]
-        # bounded: n_merges rows; hashlib.md5 == Spark/DuckDB md5
         merge_hash = sum(
-            int(
-                hashlib.md5(
-                    f"{r['step']}|{r['pair']}|{r['merged']}|{r['n']}".encode()
-                ).hexdigest()[:8],
-                16,
-            )
-            for r in spark.read.parquet(f"{store}/merges").collect()
+            _md5_32_driver(f"{r['step']}|{r['pair']}|{r['merged']}|{r['n']}")
+            for r in mrows
         )
-        vocab = d.select(
-            F.explode(spark_tokens(F.col("text"))).alias("tok")
-        ).distinct()
-        reenc = ts.encode_words(vocab, merges)
-        re_hash = reenc.agg(F.sum(h_seg).alias("h")).collect()[0]["h"]
+        # the re-encode leg is vocabulary-bounded: the driver fold under
+        # the BPE driver cap, encode_words over the same cached
+        # vocabulary above it
+        vocab = (
+            d.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
+            .distinct()
+            .persist()
+        )
+        try:
+            got = _collect_under_cap(vocab)
+            if got is not None:
+                re_hash = sum(
+                    _md5_32_driver(f"{t}|{_bpe_encode_driver(t, merges)}")
+                    for (t,) in got
+                )
+            else:
+                reenc = ts.encode_words(vocab, merges)
+                re_hash = reenc.agg(F.sum(h_seg).alias("h")).collect()[0]["h"]
+        finally:
+            vocab.unpersist(blocking=False)
     finally:
         shutil.rmtree(store, ignore_errors=True)
     rows = [
@@ -3634,16 +3689,30 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
 #     (8*|chars_a*toks_b - chars_b*bpe_a| > chars_b*bpe_a).
 #
 # Scale shape: ONE pass over the arriving slice builds its per-step
-# word histogram (the corpus-scale shuffle); everything after is
-# vocabulary-bounded — 16 encode folds over the arrived vocab, a
-# |steps|x|vocab| cumulative join (steps broadcast), a 5-row grid
-# left-joined so zero-arrival steps still emit rows (the s19
-# zero-hits rule).  The oracle re-derives the frozen tokenizer with
-# the 16 CTE training stages restricted to the base slice and
-# encodes the arrived vocabulary with 16 more fold stages.
+# word histogram and doc counts (the corpus-scale shuffles); every
+# gate input after that is vocabulary-bounded — the frozen
+# segmentation, the merge list, the (step, tok, n) histogram.  Under
+# _BPE_DRIVER_VOCAB_CAP (the BPE trainer's switch) the inputs are
+# collected behind limit(cap + 1) guards, novel words encode through
+# the same Python greedy fold the driver trainer uses, and the exact
+# integer sums run in the driver; one local table of 5 sum rows
+# feeds the Spark projection that does the rounded ratios and the
+# DECIMAL(38,0) decision.  Above the cap the distributed plan runs
+# instead: 16 encode folds over the arrived vocab, a |steps|x|vocab|
+# join (steps broadcast), a 5-row grid left-joined so zero-arrival
+# steps still emit rows (the s19 zero-hits rule).  The oracle
+# re-derives the frozen tokenizer with the 16 CTE training stages
+# restricted to the base slice and encodes the arrived vocabulary
+# with 16 more fold stages.
 # ---------------------------------------------------------------------------
 
 _S20_STEPS = 4
+
+
+_GATE_SUMS_SCHEMA = (
+    "s long, n_docs long, n_tokens long, oov_tokens long, chars_a long, "
+    "bpe_a long, chars_b long, toks_b long"
+)
 
 
 def tokenizer_staleness_gate(
@@ -3652,24 +3721,144 @@ def tokenizer_staleness_gate(
     arrived_doc_counts: DataFrame,
     merges: list[tuple[str, str]],
     n_steps: int,
+    cumulative: bool = True,
 ) -> DataFrame:
     """The s20 core over any frozen tokenizer — factored so the
     artifact-parity pytest can feed it the PERSISTED store
     (load_segmentation + load_merge_list) and require the identical
-    gate as the in-query-trained path.
+    gate as the in-query-trained path; c6 runs it through
+    ``tokenizer_lifecycle_tick`` and st19 per step.
 
     ``base_seg``: the frozen vocabulary in store format
     (tok, n, seg, n_sym — seg trimmed).  ``arrived_words``:
     (step, tok, n) per-step word histogram of the arriving stream,
     step in 1..n_steps.  ``arrived_doc_counts``: (step, n_docs).
     ``merges``: the frozen merge list [(pair, merged)], trimmed.
-    Emits one row per cumulative step 0..n_steps."""
+    ``cumulative``: step s counts the arrivals with step <= s and the
+    grid is 0..n_steps (s20, c6); otherwise step == s over 1..n_steps
+    (st19's per-batch monitor).  Emits one row per grid step.
+
+    All three inputs are vocabulary-bounded, so when each fits under
+    ``_BPE_DRIVER_VOCAB_CAP`` they are collected and the exact integer
+    sums run in the driver (novel words encode through
+    ``_bpe_encode_driver``; in-vocabulary words read the stored
+    n_sym, which is the same fold's output by the train->apply
+    closure).  Above the cap the distributed plan runs over the cached
+    arrivals.  The final ratio/decision projection is Spark's on
+    both paths, and the result is backed by local rows either way, so
+    it stays valid after the store's files are deleted."""
+    spark = base_seg.sparkSession
+    first = 0 if cumulative else 1
+    seg = base_seg.select("tok", "n", "n_sym")
+    # both arrival inputs are corpus-scale aggregates: one tagged frame,
+    # persisted before its probe so the above-cap plan reuses it; the
+    # frozen vocabulary is vocabulary-scale and is simply read again
+    arrivals = (
+        arrived_words.select(F.lit(False).alias("is_docs"), "step", "tok", "n")
+        .unionByName(
+            arrived_doc_counts.select(
+                F.lit(True).alias("is_docs"),
+                "step",
+                F.lit(None).cast("string").alias("tok"),
+                F.col("n_docs").alias("n"),
+            )
+        )
+        .persist()
+    )
+    try:
+        seg_rows = _collect_under_cap(seg)
+        arr_rows = None if seg_rows is None else _collect_under_cap(arrivals)
+        if arr_rows is not None:
+            sums = _gate_sums_driver(
+                seg_rows, arr_rows, merges, first, n_steps, cumulative
+            )
+            return local_rows_df(spark, sums, _GATE_SUMS_SCHEMA).selectExpr(
+                *_GATE_DECISION_SQL
+            )
+        words = arrivals.filter(~F.col("is_docs")).select("step", "tok", "n")
+        docs = arrivals.filter("is_docs").select(
+            "step", F.col("n").alias("n_docs")
+        )
+        out = _gate_sums_spark(
+            seg, words, docs, merges, first, n_steps, cumulative
+        ).selectExpr(*_GATE_DECISION_SQL)
+        # bounded: one row per grid step, collected while inputs are cached
+        return local_rows_df(spark, out.collect(), out.schema)
+    finally:
+        arrivals.unpersist(blocking=False)
+
+
+def _gate_sums_driver(
+    seg_rows: list,
+    arr_rows: list,
+    merges: list[tuple[str, str]],
+    first: int,
+    n_steps: int,
+    cumulative: bool,
+) -> list[tuple]:
+    """The gate's exact integer sums over the collected inputs — the
+    frozen vocabulary (tok, n, n_sym) and the tagged arrivals
+    (is_docs, step, tok, n) — one ``_GATE_SUMS_SCHEMA`` row per grid
+    step."""
+    nsym = {tok: k for tok, _n, k in seg_rows}
+    chars_b = toks_b = None  # SUM over no rows is NULL, as in Spark
+    if seg_rows:
+        chars_b = sum(n * len(tok) for tok, n, _k in seg_rows)
+        toks_b = sum(n * k for _tok, n, k in seg_rows)
+    # per arrival step: [n_docs, n_tokens, oov_tokens, chars_a, bpe_a]
+    per_step: dict = {}
+    novel: dict[str, int] = {}
+    for is_docs, step, tok, n in arr_rows:
+        acc = per_step.setdefault(step, [0] * 5)
+        if is_docs:
+            acc[0] += n
+            continue
+        k = nsym.get(tok)
+        oov = 0
+        if k is None:
+            k = novel.get(tok)
+            if k is None:
+                k = novel[tok] = _bpe_encode_driver(tok, merges).count(" ") + 1
+            oov = n
+        acc[1] += n
+        acc[2] += oov
+        acc[3] += n * len(tok)
+        acc[4] += n * k
+    rows = []
+    for s in range(first, n_steps + 1):
+        tot = [0] * 5
+        for step, acc in per_step.items():
+            if step is not None and (step <= s if cumulative else step == s):
+                tot = [a + b for a, b in zip(tot, acc)]
+        rows.append((s, *tot, chars_b, toks_b))
+    return rows
+
+
+def _gate_sums_spark(
+    base_seg: DataFrame,
+    arrived_words: DataFrame,
+    arrived_doc_counts: DataFrame,
+    merges: list[tuple[str, str]],
+    first: int,
+    n_steps: int,
+    cumulative: bool,
+) -> DataFrame:
+    """The distributed twin of ``_gate_sums_driver`` (the above-cap
+    path): 16 encode folds over the arrived vocabulary, a
+    |steps| x |vocab| join (steps broadcast), and a steps grid
+    left-joined so zero-arrival steps still emit rows (the s19
+    zero-hits rule)."""
     from dww_data_pipeline_spark.sources.tokenizer_store import encode_words
 
     spark = base_seg.sparkSession
-    steps = spark.range(0, n_steps + 1).select(
-        F.col("id").cast("int").alias("s")
-    )
+    steps = spark.range(first, n_steps + 1).select(F.col("id").alias("s"))
+
+    def hit():
+        return (
+            F.col("step") <= F.col("s") if cumulative
+            else F.col("step") == F.col("s")
+        )
+
     # frozen-tokenizer totals: one 1-row aggregate, cross-joined back
     bt = base_seg.agg(
         F.sum(F.col("n") * F.length("tok")).alias("chars_b"),
@@ -3684,7 +3873,7 @@ def tokenizer_staleness_gate(
         .join(
             base_seg.select("tok", F.lit(1).alias("in_vocab")), "tok", "left"
         )
-        .join(F.broadcast(steps), F.col("step") <= F.col("s"))
+        .join(F.broadcast(steps), hit())
     )
     cum = arr.groupBy("s").agg(
         F.sum("n").alias("n_tokens"),
@@ -3695,68 +3884,50 @@ def tokenizer_staleness_gate(
         F.sum(F.col("n") * F.col("n_sym")).alias("bpe_a"),
     )
     docs = (
-        steps.join(
-            arrived_doc_counts, F.col("step") <= F.col("s"), "left"
-        )
+        steps.join(arrived_doc_counts, hit(), "left")
         .groupBy("s")
         .agg(F.coalesce(F.sum("n_docs"), F.lit(0)).cast("long").alias("n_docs"))
     )
     z = F.lit(0).cast("long")
-    full = (
+    return (
         steps.join(cum, "s", "left")
+        .join(docs, "s")
+        .crossJoin(F.broadcast(bt))
         .select(
             "s",
+            "n_docs",
             F.coalesce("n_tokens", z).alias("n_tokens"),
             F.coalesce("oov_tokens", z).alias("oov_tokens"),
             F.coalesce("chars_a", z).alias("chars_a"),
             F.coalesce("bpe_a", z).alias("bpe_a"),
+            "chars_b",
+            "toks_b",
         )
-        .join(docs, "s")
-        .crossJoin(F.broadcast(bt))
     )
-    dec = "decimal(38,0)"
-    drift_num = F.abs(
-        F.col("chars_a").cast(dec) * F.col("toks_b")
-        - F.col("chars_b").cast(dec) * F.col("bpe_a")
-    )
-    return full.select(
-        F.col("s").cast("long").alias("step"),
-        F.col("n_docs").alias("n_docs_arrived"),
-        F.col("n_tokens").alias("n_tokens_arrived"),
-        "oov_tokens",
-        F.when(
-            F.col("n_tokens") > 0,
-            F.round(
-                F.col("oov_tokens").cast("double")
-                / F.col("n_tokens").cast("double"),
-                6,
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("oov_rate"),
-        F.col("chars_a").alias("chars_arrived"),
-        F.col("bpe_a").alias("bpe_tokens_arrived"),
-        F.when(
-            F.col("bpe_a") > 0,
-            F.round(
-                F.col("chars_a").cast("double") / F.col("bpe_a").cast("double"),
-                6,
-            ),
-        ).alias("fertility_arrived"),
-        F.round(
-            F.col("chars_b").cast("double") / F.col("toks_b").cast("double"), 6
-        ).alias("fertility_base"),
-        (
-            (4 * F.col("oov_tokens") > F.col("n_tokens"))
-            | (
-                (F.col("bpe_a") > 0)
-                & (
-                    F.lit(8).cast(dec) * drift_num
-                    > F.col("chars_b").cast(dec) * F.col("bpe_a")
-                )
-            )
-        ).alias("retrain"),
-    )
+
+
+# The gate's output projection over ``_GATE_SUMS_SCHEMA`` sums: rounded
+# ratios and the retrain decision (OOV share > 1/4 OR relative
+# fertility drift > 1/8, integer cross-multiplies in DECIMAL(38,0)).
+# Fixed column names only, so it is SQL text: one call builds it.
+_GATE_DECISION_SQL = (
+    "CAST(s AS BIGINT) AS step",
+    "n_docs AS n_docs_arrived",
+    "n_tokens AS n_tokens_arrived",
+    "oov_tokens",
+    "CASE WHEN n_tokens > 0 THEN round(CAST(oov_tokens AS DOUBLE)"
+    " / CAST(n_tokens AS DOUBLE), 6) ELSE 0.0D END AS oov_rate",
+    "chars_a AS chars_arrived",
+    "bpe_a AS bpe_tokens_arrived",
+    "CASE WHEN bpe_a > 0 THEN round(CAST(chars_a AS DOUBLE)"
+    " / CAST(bpe_a AS DOUBLE), 6) END AS fertility_arrived",
+    "round(CAST(chars_b AS DOUBLE) / CAST(toks_b AS DOUBLE), 6)"
+    " AS fertility_base",
+    "(4 * oov_tokens > n_tokens) OR (bpe_a > 0 AND"
+    " CAST(8 AS DECIMAL(38,0)) * abs(CAST(chars_a AS DECIMAL(38,0)) * toks_b"
+    " - CAST(chars_b AS DECIMAL(38,0)) * bpe_a)"
+    " > CAST(chars_b AS DECIMAL(38,0)) * bpe_a) AS retrain",
+)
 
 
 def _s20_oracle() -> str:
@@ -3835,7 +4006,8 @@ FROM cum c JOIN cd ON cd.s = c.s CROSS JOIN bt"""
     "OR relative fertility drift > 1/8, integer cross-multiplies in "
     "DECIMAL(38,0) — chars x tokens overflows BIGINT at 100 TB). One "
     "corpus pass builds the arriving word histogram; everything else "
-    "is vocabulary-bounded (16 encode folds, steps-grid joins); "
+    "is vocabulary-bounded and summed in the driver under the BPE "
+    "driver cap (16 encode folds and steps-grid joins above it); "
     "zero-arrival steps still emit rows (the s19 zero-hits rule). "
     "Oracle re-derives the frozen tokenizer with base-restricted CTE "
     "training stages + 16 arrived-vocab encode stages",
@@ -3902,10 +4074,13 @@ def _s20_arrivals(d: DataFrame) -> tuple[DataFrame, DataFrame]:
 #
 # Scale shape: two t33 training runs at most (base always, full only
 # on retrain — each one corpus-histogram shuffle, then vocabulary-
-# bounded folds), 16 vocabulary-bounded encode folds for the gate,
-# and bounded collects only (the 5-row gate table, 1-row hash
-# aggregates).  The stores are KB-scale artifacts in mkdtemp dirs
-# deleted after the 9-row result materializes.
+# bounded folds), the arriving slice's histogram shuffles, and
+# bounded collects only: s20's gate core reads the persisted store
+# with its pinned schema and, under _BPE_DRIVER_VOCAB_CAP, sums the
+# gate in the driver (the distributed gate plan runs above the cap);
+# then the 5-row gate table and the 1-row hash aggregates.  The
+# stores are KB-scale artifacts in mkdtemp dirs deleted after the
+# 9-row result materializes.
 # ---------------------------------------------------------------------------
 
 
@@ -4052,17 +4227,24 @@ def c6_tokenizer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming/tokenizer_ingest.py runs the same per-doc rows via
 # foreachBatch.  The registered query simulates the arrival (s20's
 # doc_id%4==3 quarter in 4 steps, each step = one micro-batch) and
-# aggregates the per-doc rows per batch, with the per-batch alarm bit
+# sums the batch's arriving words, with the per-batch alarm bit
 # (s20's thresholds applied batch-locally: OOV share > 1/4 OR
 # relative fertility drift > 1/8, DECIMAL(38,0) cross-multiplies).
+# A batch's sums are the sums of its documents' per-doc rows, so the
+# query runs s20's gate core with per-step (step == s) arrivals
+# instead of cumulative ones — the only difference from s20.
 #
-# Scale shape: per batch one explode + two BROADCAST joins against
-# KB-scale store tables + 16 vocabulary-bounded encode folds over the
-# batch's NOVEL words; the steps grid (4 rows) left-joins so
-# zero-arrival batches still emit rows (the s19 rule).  The oracle
-# re-derives the frozen tokenizer with base-restricted CTE stages and
-# encodes the arrived vocabulary with 16 more fold stages — per STEP,
-# not cumulative (the one structural difference from s20's oracle).
+# Scale shape: s20's — one pass over the arriving slice builds the
+# (step, tok, n) histogram and per-step doc counts; the frozen store
+# reads with its pinned schema; under _BPE_DRIVER_VOCAB_CAP the sums
+# run in the driver with the Python encode fold over NOVEL words
+# only, and above it the distributed gate plan (16 encode folds over
+# the arrived vocab, steps broadcast) runs instead.  The steps grid
+# (4 rows) keeps zero-arrival batches in the output (the s19 rule).
+# The oracle re-derives the frozen tokenizer with base-restricted CTE
+# stages and encodes the arrived vocabulary with 16 more fold stages
+# — per STEP, not cumulative (the one structural difference from
+# s20's oracle).
 # ---------------------------------------------------------------------------
 
 
@@ -4137,9 +4319,12 @@ FROM per p JOIN cd ON cd.s = p.s CROSS JOIN bt"""
     "thresholds batch-locally: OOV > 1/4 OR fertility drift > 1/8, "
     "DECIMAL(38,0) cross-multiplies). Per-doc metrics depend only on "
     "the frozen store (st13 contract: union-of-batches == one-shot "
-    "batch for any chopping, parity-tested). Per batch: one explode "
-    "+ two broadcast joins + 16 vocabulary-bounded encode folds over "
-    "NOVEL words only; zero-arrival batches still emit rows",
+    "batch for any chopping, parity-tested). Runs s20's gate core "
+    "with per-step arrivals: one pass builds the arriving word "
+    "histogram, and the vocabulary-bounded sums run in the driver "
+    "(novel words through the Python encode fold) under the BPE "
+    "driver cap, distributed above it; zero-arrival batches still "
+    "emit rows",
 )
 def st19_stream_tokenizer_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -4154,89 +4339,30 @@ def st19_stream_tokenizer_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.filter(F.col("doc_id") % 4 != 3), store,
             n_merges=_BPE_TRAIN_MERGES,
         )
-        arr = d.filter(F.col("doc_id") % 4 == 3)
-        per_doc = ts.frozen_oov_doc_metrics(
-            arr.select("doc_id", "text"), spark, store
-        ).withColumn("batch", F.expr("CAST((doc_id % 16) DIV 4 AS INT) + 1"))
-        bt = ts.load_segmentation(spark, store).agg(
-            F.sum(F.col("n") * F.length("tok")).alias("chars_b"),
-            F.sum(F.col("n") * F.col("n_sym")).alias("toks_b"),
+        arrived_words, arrived_doc_counts = _s20_arrivals(d)
+        # backed by local rows: valid after the store is deleted
+        gate = tokenizer_staleness_gate(
+            ts.load_segmentation(spark, store),
+            arrived_words,
+            arrived_doc_counts,
+            ts.load_merge_list(spark, store),
+            _S20_STEPS,
+            cumulative=False,
         )
-        steps = spark.range(1, _S20_STEPS + 1).select(
-            F.col("id").cast("int").alias("batch")
-        )
-        z = F.lit(0).cast("long")
-        per = (
-            steps.join(
-                per_doc.groupBy("batch").agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("n_tokens").alias("n_tokens"),
-                    F.sum("oov_tokens").alias("oov_tokens"),
-                    F.sum("chars").alias("chars"),
-                    F.sum("bpe_tokens").alias("bpe_tokens"),
-                ),
-                "batch",
-                "left",
-            )
-            .select(
-                "batch",
-                F.coalesce("n_docs", z).alias("n_docs"),
-                F.coalesce("n_tokens", z).alias("n_tokens"),
-                F.coalesce("oov_tokens", z).alias("oov_tokens"),
-                F.coalesce("chars", z).alias("chars"),
-                F.coalesce("bpe_tokens", z).alias("bpe_tokens"),
-            )
-            .crossJoin(F.broadcast(bt))
-        )
-        dec = "decimal(38,0)"
-        drift_num = F.abs(
-            F.col("chars").cast(dec) * F.col("toks_b")
-            - F.col("chars_b").cast(dec) * F.col("bpe_tokens")
-        )
-        out = per.select(
-            F.col("batch").cast("long").alias("batch"),
-            "n_docs",
-            "n_tokens",
-            "oov_tokens",
-            F.when(
-                F.col("n_tokens") > 0,
-                F.round(
-                    F.col("oov_tokens").cast("double")
-                    / F.col("n_tokens").cast("double"),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)).alias("oov_rate"),
-            "chars",
-            "bpe_tokens",
-            F.when(
-                F.col("bpe_tokens") > 0,
-                F.round(
-                    F.col("chars").cast("double")
-                    / F.col("bpe_tokens").cast("double"),
-                    6,
-                ),
-            ).alias("fertility_batch"),
-            F.round(
-                F.col("chars_b").cast("double")
-                / F.col("toks_b").cast("double"),
-                6,
-            ).alias("fertility_base"),
-            (
-                (4 * F.col("oov_tokens") > F.col("n_tokens"))
-                | (
-                    (F.col("bpe_tokens") > 0)
-                    & (
-                        F.lit(8).cast(dec) * drift_num
-                        > F.col("chars_b").cast(dec) * F.col("bpe_tokens")
-                    )
-                )
-            ).alias("alarm"),
-        )
-        # materialize before the temp store is deleted: 4 bounded rows
-        rows = out.collect()
-        return local_rows_df(spark, rows, out.schema)
     finally:
         shutil.rmtree(store, ignore_errors=True)
+    return gate.selectExpr(
+        "step AS batch",
+        "n_docs_arrived AS n_docs",
+        "n_tokens_arrived AS n_tokens",
+        "oov_tokens",
+        "oov_rate",
+        "chars_arrived AS chars",
+        "bpe_tokens_arrived AS bpe_tokens",
+        "fertility_arrived AS fertility_batch",
+        "fertility_base",
+        "retrain AS alarm",
+    )
 
 
 def _bpe_train_segmentation(
@@ -4274,36 +4400,36 @@ def bpe_train_segmentation_df(
     single job returns the complete histogram; at cap + 1 rows the
     distributed loop below runs unchanged (the 100 TB posture —
     parity between the two paths is pinned by
-    tests/test_pipeline_ext2.py::TestBpeDriverTrainer)."""
+    tests/test_pipeline_ext2.py::TestBpeDriverTrainer).  The
+    histogram is persisted before the probe and released on both
+    paths, so above the cap the loop starts from the probe's
+    histogram instead of shuffling the corpus a second time."""
     hist = (
         d.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
+        .persist()  # the probe's histogram is the loop's input above the cap
     )
-    spark = d.sparkSession
-    cap = _BPE_DRIVER_VOCAB_CAP
-    got = hist.limit(cap + 1).collect()
-    if len(got) <= cap:
-        merges, seg_rows = _bpe_train_driver(
-            [(r[0], r[1]) for r in got], n_merges
-        )
-        return merges, local_rows_df(
-            spark, seg_rows, "tok string, n long, seg string"
-        )
-
-    words = hist.select(
-        "tok",
-        "n",
-        F.expr(
-            "concat(' ', array_join(transform(sequence(1, "
-            "length(tok)), i -> substring(tok, i, 1)), ' '), ' ')"
-        ).alias("seg"),
-    ).persist()
     from dww_data_pipeline_spark.session import bounded_loop_shuffle
 
     try:
-        n_vocab = words.count()  # materialize the histogram once
-        seg = words
+        got = _collect_under_cap(hist)
+        if got is not None:
+            merges, seg_rows = _bpe_train_driver(
+                [(r[0], r[1]) for r in got], n_merges
+            )
+            return merges, local_rows_df(
+                d.sparkSession, seg_rows, "tok string, n long, seg string"
+            )
+        n_vocab = hist.count()  # materialize the histogram once
+        seg = hist.select(
+            "tok",
+            "n",
+            F.expr(
+                "concat(' ', array_join(transform(sequence(1, "
+                "length(tok)), i -> substring(tok, i, 1)), ' '), ' ')"
+            ).alias("seg"),
+        )
         merges: list[tuple[str, str, int]] = []
         # the whole loop is vocabulary-bounded: size its shuffles from
         # the measured histogram, not the corpus-level default (r13;
@@ -4371,7 +4497,7 @@ def bpe_train_segmentation_df(
                 ).localCheckpoint(eager=False)
         return merges, seg
     finally:
-        words.unpersist(blocking=False)
+        hist.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------

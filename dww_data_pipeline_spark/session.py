@@ -90,6 +90,10 @@ def local_rows_df(spark: SparkSession, rows, schema):
     if not isinstance(struct, StructType):
         return spark.createDataFrame(rows, schema)
     rows = list(rows)
+    # the column-wise path below reads rows positionally; dicts and
+    # other row types keep createDataFrame's own handling
+    if not all(isinstance(r, (tuple, list)) for r in rows):
+        return spark.createDataFrame(rows, struct)
     names = [f.name for f in struct.fields]
     # fail fast on shape mismatches exactly as createDataFrame(rows,
     # schema) would (r14 advice: zip() silently truncated an over-long

@@ -21,12 +21,15 @@ serves from parquet).  This module is that path:
   KB-to-MB scale even on a 100 TB corpus — one coalesced merge file,
   one small segmentation write.
 
-* ``load_merge_list`` / ``load_segmentation``: read the artifact
-  back.  The merge list is a bounded collect (n_merges rows — the
-  e7/pr1 bounded-artifact discipline); the segmentation is a
-  DataFrame sized for ``F.broadcast`` onto an exploded token stream
-  (how t25's artifact-backed variant joins it — no corpus-side
-  shuffle).
+* ``load_merge_table`` / ``load_merge_list`` / ``load_segmentation``:
+  read the artifact back with the schemas it was written with
+  (``MERGES_SCHEMA``, ``SEGMENTATION_SCHEMA``), so a load runs no
+  parquet schema-inference job.  The merge list is a bounded collect
+  (n_merges rows — the e7/pr1 bounded-artifact discipline); the
+  segmentation is a DataFrame sized for ``F.broadcast`` onto an
+  exploded token stream (how t25's artifact-backed variant joins it
+  — no corpus-side shuffle) or for a bounded driver collect (how the
+  s20/c6/st19 gate core reads it under the BPE driver cap).
 
 * ``encode_words``: segment ANY word column with a LOADED merge list
   — the frozen-tokenizer encode path.  Novel (out-of-vocabulary)
@@ -34,12 +37,21 @@ serves from parquet).  This module is that path:
   application, not a vocabulary lookup: each learned merge applies
   in rank order as one exact greedy fold (merge, then skip).  This
   is what s20's staleness gate runs over ARRIVING docs the frozen
-  tokenizer has never seen.
+  tokenizer has never seen above the BPE driver cap (under it, the
+  gate encodes them with the same fold in Python,
+  ``plans.pipeline_ext2._bpe_encode_driver``).
 
 * ``fertility_from_store`` / ``encode_top_from_store``: the
   artifact-backed twins of t25 and t35 — broadcast the loaded
-  (tok, n_sym) table instead of re-training; OOV words fall back to
-  ``encode_words`` over the (bounded) novel vocabulary.
+  (tok, n_sym) table instead of re-training; OOV words encode over
+  the (bounded) novel vocabulary, in the driver under the BPE driver
+  cap and with ``encode_words`` above it.  ``fertility_report`` is
+  the report both t25 and t25b build.
+
+* ``tokenizer_lifecycle_tick``: c6's gate -> rebuild -> swap over a
+  persisted store; ``frozen_oov_doc_metrics``: the per-document
+  drift rows the streaming ingest (streaming/tokenizer_ingest.py)
+  writes per micro-batch.
 
 Rebuilds follow the lake discipline: write to a fresh directory and
 swap (``sources.maintenance``); the s20 staleness gate is the
@@ -61,6 +73,11 @@ from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.session import local_rows_df
 
+# The store's on-disk schemas, written by ``build_tokenizer_store`` and
+# pinned on every read (no parquet schema-inference job per load).
+MERGES_SCHEMA = "step long, pair string, merged string, n long"
+SEGMENTATION_SCHEMA = "tok string, n long, seg string, n_sym long"
+
 
 def build_tokenizer_store(
     docs: DataFrame, out_dir: str, n_merges: int = 16
@@ -77,9 +94,9 @@ def build_tokenizer_store(
     mrows = [
         (it + 1, p.strip(), m.strip(), n) for it, (p, m, n) in enumerate(merges)
     ]
-    local_rows_df(
-        spark, mrows, "step long, pair string, merged string, n long"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "merges"))
+    local_rows_df(spark, mrows, MERGES_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "merges"))
     seg.select(
         "tok",
         "n",
@@ -132,13 +149,20 @@ def tokenizer_store_cached(
     return store
 
 
+def load_merge_table(spark: SparkSession, store_dir: str) -> DataFrame:
+    """The persisted merge table: (step, pair, merged, n), pairs
+    trimmed single-space."""
+    return spark.read.schema(MERGES_SCHEMA).parquet(
+        os.path.join(store_dir, "merges")
+    )
+
+
 def load_merge_list(spark: SparkSession, store_dir: str) -> list[tuple[str, str]]:
     """The learned merge list in rank order, as [(pair, merged)] with
     trimmed single-space pairs (``"a b"``).  Bounded collect —
     n_merges rows."""
     rows = sorted(
-        spark.read.parquet(os.path.join(store_dir, "merges")).collect(),
-        key=lambda r: r["step"],
+        load_merge_table(spark, store_dir).collect(), key=lambda r: r["step"]
     )
     if not rows:
         raise ValueError(f"empty merge table under {store_dir}")
@@ -148,7 +172,9 @@ def load_merge_list(spark: SparkSession, store_dir: str) -> list[tuple[str, str]
 def load_segmentation(spark: SparkSession, store_dir: str) -> DataFrame:
     """The persisted training-corpus vocabulary:
     (tok, n, seg, n_sym), seg trimmed single-space."""
-    return spark.read.parquet(os.path.join(store_dir, "segmentation"))
+    return spark.read.schema(SEGMENTATION_SCHEMA).parquet(
+        os.path.join(store_dir, "segmentation")
+    )
 
 
 def encode_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
@@ -215,13 +241,51 @@ def fertility_from_store(
     token denominator served from the PERSISTED tokenizer instead of
     an in-query training run.  The vocabulary-bounded (tok, n_sym)
     table broadcasts onto the exploded word stream — one corpus-term
-    shuffle total, zero training work per call."""
+    shuffle total, zero training work per call.
+
+    The corpus words missing from the store are vocabulary-bounded
+    too: under ``_BPE_DRIVER_VOCAB_CAP`` they are collected and
+    encoded by the driver fold (``_bpe_encode_driver``); above it
+    ``encode_words`` runs over the same persisted frame and the
+    bounded |source| x |lang| report is collected before release."""
+    from dww_data_pipeline_spark.plans.pipeline_ext2 import (
+        _bpe_encode_driver,
+        _collect_under_cap,
+    )
     from dww_data_pipeline_spark.plans.text_exprs import spark_tokens
 
-    corpus_vocab = docs.select(
-        F.explode(spark_tokens(F.col("text"))).alias("tok")
-    ).distinct()
-    nsym = _nsym_with_oov(corpus_vocab, spark, store_dir)
+    nsym = load_segmentation(spark, store_dir).select("tok", "n_sym")
+    novel = (
+        docs.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
+        .distinct()
+        .join(nsym.select("tok"), "tok", "left_anti")
+        .persist()
+    )
+    try:
+        merges = load_merge_list(spark, store_dir)
+        got = _collect_under_cap(novel)
+        if got is not None:
+            enc = local_rows_df(
+                spark,
+                [(t, _bpe_encode_driver(t, merges).count(" ") + 1)
+                 for (t,) in got],
+                "tok string, n_sym long",
+            )
+            return fertility_report(docs, nsym.unionByName(enc))
+        enc = encode_words(novel, merges).select("tok", "n_sym")
+        out = fertility_report(docs, nsym.unionByName(enc))
+        return local_rows_df(spark, out.collect(), out.schema)
+    finally:
+        novel.unpersist(blocking=False)
+
+
+def fertility_report(docs: DataFrame, nsym: DataFrame) -> DataFrame:
+    """The t25 fertility report over ``docs``, given (tok, n_sym) for
+    every word: per (source, lang) the docs, exact char and whitespace-
+    token sums, the BPE token sum, and both chars-per-token ratios.
+    Shared by t25 (in-query trained nsym) and t25b (the store's)."""
+    from dww_data_pipeline_spark.plans.text_exprs import spark_tokens
+
     base = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.length("text")).alias("sum_chars"),
@@ -235,6 +299,9 @@ def fertility_from_store(
         .groupBy("source", "lang")
         .agg(F.sum("n_sym").alias("sum_bpe_tokens"))
     )
+    # left join: a (source, lang) group whose documents contain zero
+    # tokens must stay visible (sum_bpe_tokens = 0, null fertility)
+    # rather than vanish from the report (round-9 advice)
     bpe_sum = F.coalesce(F.col("sum_bpe_tokens"), F.lit(0).cast("long"))
     return base.join(bpe, ["source", "lang"], "left").select(
         "source",
@@ -307,10 +374,13 @@ def tokenizer_lifecycle_tick(
     bounded (n_steps + 1)-row decision table as Rows.
 
     Scale shape: the gate is s20's (one corpus-scale pass over the
-    arriving slice upstream of this call, vocabulary-bounded encode
-    folds inside); the rebuild is one t33 training run; the swap is
-    two renames.  Nothing here holds corpus-scale data on the driver
-    — the gate table is n_steps + 1 rows.
+    arriving slice upstream of this call; inside, vocabulary-bounded
+    sums in the driver under the BPE driver cap, or encode folds in
+    a distributed plan above it); the rebuild is one t33 training
+    run; the swap is two renames.  Nothing here holds corpus-scale
+    data on the driver — the collected gate inputs are capped at
+    ``_BPE_DRIVER_VOCAB_CAP`` rows and the gate table is
+    n_steps + 1 rows.
     """
     from dww_data_pipeline_spark.plans.pipeline_ext2 import (
         tokenizer_staleness_gate,
@@ -349,7 +419,9 @@ def frozen_oov_doc_metrics(
     never on what else is in the batch — so a streaming ingest can
     compute these per micro-batch and the union over ANY chopping
     equals the one-shot batch answer (tests/test_stream_ingest.py
-    asserts it; the st19 registered query aggregates these per step).
+    asserts it).  The st19 registered query gets the same per-batch
+    sums from the arrival word histogram through s20's gate core;
+    tests/test_tokenizer_store.py pins that the two agree.
 
     Scale shape: one batch-proportional explode + two BROADCAST joins
     (the vocabulary-bounded (tok, n_sym) table and the frozen vocab

@@ -197,3 +197,23 @@ class TestCalibrationPanelV2:
     def test_headline_b_is_frozen_seven(self):
         assert len(HEADLINE_B) == 7
         assert "d28_ppjoin_exact" in HEADLINE_B
+
+
+import bench  # noqa: E402
+
+
+class TestCurrentRound:
+    def test_side_files_do_not_break_the_round(self, tmp_path, monkeypatch):
+        """BENCH_r13_c8.json matches the BENCH_r*.json glob but not
+        ``_r(\\d+)\\.json$``; it must be skipped, not crash the bench."""
+        for name in ("BENCH_r13.json", "BENCH_r13_c8.json"):
+            (tmp_path / name).write_text("{}")
+        monkeypatch.setattr(bench, "REPO", str(tmp_path))
+        monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+        assert bench._current_round() == 14
+
+    def test_no_bench_files_is_round_one(self, tmp_path, monkeypatch):
+        (tmp_path / "BENCH_r07_c8.json").write_text("{}")
+        monkeypatch.setattr(bench, "REPO", str(tmp_path))
+        monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+        assert bench._current_round() == 1

@@ -48,6 +48,22 @@ class TestLocalRowsDf:
         with pytest.raises(ValueError, match="1 fields, schema has 2"):
             local_rows_df(spark, [(1,)], "a long, b string")
 
+    def test_dict_rows_take_the_default_path(self, spark):
+        # dict rows are not positional: the arity check must not read
+        # their key count, and the values must land by field name
+        rows = [{"b": "x", "a": 1}, {"a": 2, "b": None}]
+        got = local_rows_df(spark, rows, "a long, b string")
+        want = spark.createDataFrame(rows, "a long, b string")
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect()), key=str) == sorted(
+            map(tuple, want.collect()), key=str
+        )
+        assert sorted(r["a"] for r in got.collect()) == [1, 2]
+        # all-string fields: a positional read of the dict would yield
+        # its keys as values without any Arrow error to fall back on
+        got = local_rows_df(spark, [{"b": "x", "a": "y"}], "a string, b string")
+        assert [tuple(r) for r in got.collect()] == [("y", "x")]
+
     def test_row_objects_round_trip(self, spark):
         src = spark.range(3).select(
             "id",

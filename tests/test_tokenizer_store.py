@@ -171,6 +171,40 @@ class TestArtifactBackedTwins:
         )
         assert got == want
 
+    def test_fertility_driver_and_distributed_encode_agree(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """Corpus words missing from the store encode in the driver
+        under the BPE driver cap and through ``encode_words`` above it
+        (cap 0); the report must not change.  The store is trained on
+        one English sentence, so most corpus words are novel."""
+        from dww_data_pipeline_spark.plans import pipeline_ext2 as pe2
+
+        spark_encodes = _spy_encode_words(monkeypatch)
+        d = load_table(spark, sf_dir, "documents")
+        path = tempfile.mkdtemp(prefix="dww_tokstore_fert_")
+        try:
+            build_tokenizer_store(
+                spark.createDataFrame(
+                    [(i, "the quick brown fox jumps over the lazy dog")
+                     for i in range(8)],
+                    "doc_id long, text string",
+                ),
+                path,
+            )
+            drv = sorted(
+                map(tuple, fertility_from_store(d, spark, path).collect())
+            )
+            assert not spark_encodes
+            monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+            dist = sorted(
+                map(tuple, fertility_from_store(d, spark, path).collect())
+            )
+            assert spark_encodes
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+        assert drv and drv == dist
+
     def test_encode_top_from_store_equals_t35(self, spark, sf_dir, store):
         got = sorted(
             tuple(r) for r in encode_top_from_store(spark, store).collect()
@@ -232,35 +266,7 @@ class TestStalenessGateFromStore:
     def test_planted_domain_shift_forces_retrain(self, spark):
         """Arrivals in an unseen script: every arriving token is OOV,
         so the OOV leg (> 1/4) must flip the decision to retrain."""
-        from dww_data_pipeline_spark.plans.pipeline_ext2 import (
-            tokenizer_staleness_gate,
-        )
-
-        base_docs = spark.createDataFrame(
-            [(i, "the quick brown fox jumps over the lazy dog") for i in range(8)],
-            "doc_id long, text string",
-        )
-        path = tempfile.mkdtemp(prefix="dww_tokstore_shift_")
-        try:
-            build_tokenizer_store(base_docs, path)
-            words = spark.createDataFrame(
-                [(1, "zq", 5), (2, "xv", 7)], "step int, tok string, n long"
-            )
-            counts = spark.createDataFrame(
-                [(1, 2), (2, 3)], "step int, n_docs long"
-            )
-            out = {
-                r["step"]: r
-                for r in tokenizer_staleness_gate(
-                    load_segmentation(spark, path),
-                    words,
-                    counts,
-                    load_merge_list(spark, path),
-                    2,
-                ).collect()
-            }
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
+        out = {r["step"]: r for r in _planted_shift_gate(spark)}
         # step 0: nothing arrived — row still present, keep
         assert out[0]["n_tokens_arrived"] == 0
         assert out[0]["oov_rate"] == 0.0
@@ -272,6 +278,188 @@ class TestStalenessGateFromStore:
             assert out[s]["retrain"]
         assert out[1]["n_docs_arrived"] == 2
         assert out[2]["n_docs_arrived"] == 5
+
+
+def _spy_encode_words(monkeypatch) -> list:
+    """Record each ``tokenizer_store.encode_words`` call (the Spark
+    encode, which the driver paths must not reach)."""
+    from dww_data_pipeline_spark.sources import tokenizer_store as ts
+
+    calls: list[int] = []
+    real = ts.encode_words
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(ts, "encode_words", spy)
+    return calls
+
+
+def _planted_shift_gate(spark) -> list:
+    """The s20 gate over a store trained on one English sentence, with
+    two steps of arrivals in an unseen script."""
+    from dww_data_pipeline_spark.plans.pipeline_ext2 import (
+        tokenizer_staleness_gate,
+    )
+
+    base_docs = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog") for i in range(8)],
+        "doc_id long, text string",
+    )
+    path = tempfile.mkdtemp(prefix="dww_tokstore_shift_")
+    try:
+        build_tokenizer_store(base_docs, path)
+        words = spark.createDataFrame(
+            [(1, "zq", 5), (2, "xv", 7)], "step int, tok string, n long"
+        )
+        counts = spark.createDataFrame(
+            [(1, 2), (2, 3)], "step int, n_docs long"
+        )
+        return tokenizer_staleness_gate(
+            load_segmentation(spark, path),
+            words,
+            counts,
+            load_merge_list(spark, path),
+            2,
+        ).collect()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+class TestGateDriverPath:
+    """The gate's integer sums run in the driver when every input fits
+    under ``_BPE_DRIVER_VOCAB_CAP`` and as a distributed plan above it;
+    the cap is a pure execution-strategy switch, so both paths must
+    emit identical rows (the TestBpeDriverTrainer pattern)."""
+
+    @staticmethod
+    def _both_paths(monkeypatch, run) -> tuple[list, list]:
+        """``run()`` under the default cap (asserting the driver sums
+        ran) and at cap 0 (asserting the distributed sums ran)."""
+        from dww_data_pipeline_spark.plans import pipeline_ext2 as pe2
+
+        calls: list[str] = []
+        for name in ("_gate_sums_driver", "_gate_sums_spark"):
+            real = getattr(pe2, name)
+
+            def spy(*a, _real=real, _name=name, **kw):
+                calls.append(_name)
+                return _real(*a, **kw)
+
+            monkeypatch.setattr(pe2, name, spy)
+        drv = sorted(map(tuple, run()))
+        assert calls and set(calls) == {"_gate_sums_driver"}
+        calls.clear()
+        monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+        dist = sorted(map(tuple, run()))
+        assert calls and set(calls) == {"_gate_sums_spark"}
+        return drv, dist
+
+    def test_s20_rows_identical(self, spark, sf_dir, monkeypatch):
+        q = REGISTRY["s20_tokenizer_staleness_gate"]
+        drv, dist = self._both_paths(
+            monkeypatch, lambda: q.spark(spark, sf_dir).collect()
+        )
+        assert len(drv) == 5 and drv == dist
+
+    def test_st19_rows_identical(self, spark, sf_dir, monkeypatch):
+        q = REGISTRY["st19_stream_tokenizer_oov"]
+        drv, dist = self._both_paths(
+            monkeypatch, lambda: q.spark(spark, sf_dir).collect()
+        )
+        assert len(drv) == 4 and drv == dist
+
+    def test_planted_domain_shift_identical(self, spark, monkeypatch):
+        drv, dist = self._both_paths(
+            monkeypatch, lambda: _planted_shift_gate(spark)
+        )
+        assert len(drv) == 3 and drv == dist
+
+    def test_t36_rows_identical(self, spark, sf_dir, monkeypatch):
+        """t36's re-encode leg: the driver fold under the cap,
+        ``encode_words`` at cap 0 — the same five fingerprints."""
+        from dww_data_pipeline_spark.plans import pipeline_ext2 as pe2
+
+        spark_encodes = _spy_encode_words(monkeypatch)
+        q = REGISTRY["t36_tokenizer_artifact_parity"]
+        drv = sorted(map(tuple, q.spark(spark, sf_dir).collect()))
+        assert not spark_encodes
+        monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+        dist = sorted(map(tuple, q.spark(spark, sf_dir).collect()))
+        assert spark_encodes
+        assert len(drv) == 5 and drv == dist
+
+    def test_st19_equals_per_doc_core(self, spark, sf_dir):
+        """st19's per-batch sums come from the arrival histogram; they
+        must equal the per-document core (what the streaming ingest
+        runs) summed per batch."""
+        from dww_data_pipeline_spark.sources.tokenizer_store import (
+            frozen_oov_doc_metrics,
+        )
+
+        d = load_table(spark, sf_dir, "documents")
+        path = tempfile.mkdtemp(prefix="dww_tokstore_perdoc_")
+        try:
+            build_tokenizer_store(d.filter(F.col("doc_id") % 4 != 3), path)
+            per_doc = frozen_oov_doc_metrics(
+                d.filter(F.col("doc_id") % 4 == 3).select("doc_id", "text"),
+                spark,
+                path,
+            ).withColumn("batch", F.expr("(doc_id % 16) DIV 4 + 1"))
+            want = sorted(
+                tuple(r)
+                for r in per_doc.groupBy("batch")
+                .agg(
+                    F.count(F.lit(1)),
+                    F.sum("n_tokens"),
+                    F.sum("oov_tokens"),
+                    F.sum("chars"),
+                    F.sum("bpe_tokens"),
+                )
+                .collect()
+            )
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+        got = sorted(
+            (r["batch"], r["n_docs"], r["n_tokens"], r["oov_tokens"],
+             r["chars"], r["bpe_tokens"])
+            for r in REGISTRY["st19_stream_tokenizer_oov"]
+            .spark(spark, sf_dir)
+            .collect()
+        )
+        assert got == want
+
+    def test_python_encode_equals_encode_words(self, spark, store):
+        """The driver encoder and the Spark fold segment every word
+        identically: the fixture vocabulary under its own merges, and
+        tokens with quotes, backslashes and non-ASCII characters under
+        merges made of those symbols."""
+        from dww_data_pipeline_spark.plans.pipeline_ext2 import (
+            _bpe_encode_driver,
+        )
+
+        odd = ["it's", 'say"hi"', "back\\slash", "\\'\\'", "naïve",
+               "ïïï", "日本語日本", "x😀😀y", "a"]
+        cases = [
+            (load_merge_list(spark, store),
+             [r["tok"] for r in load_segmentation(spark, store).collect()]
+             + odd),
+            ([("' s", "'s"), ("\\ '", "\\'"), ("\\' \\'", "\\'\\'"),
+              ("ï ï", "ïï"), ("日 本", "日本"), ("😀 😀", "😀😀"),
+              ('" h', '"h')],
+             odd),
+        ]
+        for merges, toks in cases:
+            df = spark.createDataFrame([(t,) for t in toks], "tok string")
+            want = {
+                r["tok"]: (r["seg"], r["n_sym"])
+                for r in encode_words(df, merges).collect()
+            }
+            for t in toks:
+                seg = _bpe_encode_driver(t, merges)
+                assert (seg, seg.count(" ") + 1) == want[t], t
+
 
 class TestLifecycleTick:
     """c6's core: gate -> rebuild -> swap, exercised for real on a
