@@ -364,10 +364,10 @@ HEADLINE_B = [
 # 1.092) the median of 159 common queries ran 1.51x slower raw, with
 # the slowdown concentrated in compute-heavy / Arrow / iterative
 # shapes the scan/shuffle pair never touches.  The round-12 bisect
-# (tools/r12_slowdown_bisect.py, results in SCALE.md "r12 slowdown
-# root-cause") showed the 16g-heap change was NOT the cause — fresh
-# 8g and 16g sessions time identically — the box itself drifted
-# shape-dependently.  CONSEQUENCE FOR HISTORY: the r07-r11
+# (`git show eb998ef:tools/r12_slowdown_bisect.py`, results in
+# SCALE.md "r12 slowdown root-cause") showed the 16g-heap change was
+# NOT the cause — fresh 8g and 16g sessions time identically — the box
+# itself drifted shape-dependently.  CONSEQUENCE FOR HISTORY: the r07-r11
 # ``value_drift_normalized`` numbers (r10's 12.101 "best ever", r11's
 # 14.759 "+22%") are 2-point-calibration artifacts and are NOT
 # comparable to the v2 numbers below; see BENCHNOTES.md for the
@@ -587,7 +587,7 @@ def box_probe(passes: int = 3) -> dict:
     stalled window shows up here as ``spread`` >> 1, so contaminated
     measurements are flagged AT MEASUREMENT TIME instead of at
     judging.  Called by main() (recorded under ``box_probe`` in the
-    artifact) and standalone by tools/r13_measure_chain.sh, which
+    artifact) and standalone by tools/measure_chain.sh, which
     retries the chain when the pre-flight spread exceeds its
     threshold."""
     import numpy as np

@@ -95,21 +95,6 @@ def to_epoch_ms(date_str: Column) -> Column:
     return (F.unix_timestamp(date_str.cast("date").cast("timestamp")) * 1000).cast("long")
 
 
-def ms_to_year(ms: Column) -> Column:
-    """Epoch ms → calendar year (reference densityCalc.js:75,78)."""
-    return F.year(F.timestamp_seconds(ms / 1000))
-
-
-def days_between(start: Column, end: Column) -> Column:
-    """Whole days between two dates (reference timeControl.js:238-242)."""
-    return F.datediff(end, start)
-
-
-def days_to_ms(days: Column) -> Column:
-    """days → milliseconds (reference dwwApi.js:227-229)."""
-    return (days.cast("long") * F.lit(86400000)).cast("long")
-
-
 def lerp_date(start_ms: Column, end_ms: Column, k: Column, n: Column) -> Column:
     """Linear time interpolation ``start + (end-start)*k/n`` formatted
     YYYY-MM-DD (reference pathCreator.js:148-160)."""

@@ -29,14 +29,3 @@ def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity; 0.0 for zero-norm inputs."""
     denom = norm(a) * norm(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

@@ -2,7 +2,7 @@
 requirement — no reference counterpart, the reference's only dedup is
 exact id-dedup, GetWeta.py:104-108 / J7 edge-dedup GetWeta.py:239-247).
 
-Five families, all shuffle-disciplined for 100 TB:
+Four families, all shuffle-disciplined for 100 TB:
 
 * exact          — hash-groupBy on a 16-byte fingerprint, never on the
                    full document (one shuffle of (hash, id), not text).
@@ -19,7 +19,6 @@ Five families, all shuffle-disciplined for 100 TB:
                    by signature prefix at scale).
 * n-gram Jaccard — exact verification of candidate pairs (used after
                    LSH to kill false positives).
-* embedding cosine — near-dup by cosine over an embedding column.
 
 Hash choice: xxhash64 (Spark built-in, JVM-side) for scale paths;
 md5-derived hashes where a cross-engine oracle must reproduce the
@@ -32,7 +31,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.functions.text import fingerprint, word_shingles
-from dww_data_pipeline_spark.functions.vectors import cosine
 
 
 # ---------------------------------------------------------------- exact
@@ -328,28 +326,6 @@ def connected_components(
                 break
         labels = new_labels
     return labels.select("id", "component")
-
-
-# -------------------------------------------------- embedding near-dup
-
-def embedding_near_dups(
-    emb: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine >= threshold.
-
-    Brute-force O(n²) within-partition variant for moderate corpora /
-    verification; the 100 TB path buckets by LSH first (see
-    operators.similarity.lsh_buckets) and applies the same predicate
-    within buckets.
-    """
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
 
 
 def connected_components_star(

@@ -374,19 +374,6 @@ def build_search_counts(worked_for: DataFrame) -> DataFrame:
     )
 
 
-def build_search_mappings(worked_for: DataFrame) -> DataFrame:
-    """gold A3: search→matched-company mapping aggregate
-    (dwwApi.js:394-423): per (search string, matched company, ratio),
-    how many credits used that mapping — the editor UI's review table."""
-    return (
-        worked_for.groupBy(
-            "company_search", "company_name", "company_id", "match_ratio"
-        )
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("company_search", F.desc("count"))
-    )
-
-
 def build_gold(
     credits_raw: DataFrame,
     company_map: DataFrame,

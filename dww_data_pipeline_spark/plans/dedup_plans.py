@@ -38,32 +38,12 @@ _NUM_HASHES = 8
 _BANDS = 4  # 2 rows per band
 
 
-def _seeded_md5(seed: int):
-    # single-arg closure: a two-arg lambda would make F.transform pass
-    # the element index as the second argument
-    return lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s))
-
-
 # Each md5 yields FOUR 32-bit minhash functions (its 8-hex-char
 # chunks): 2 md5 calls per shingle instead of 8 — the md5s were the
 # dominant cost of the whole LSH pipeline at sf0.1 (1.2 s of d2's
 # 2.4 s). min over a fixed-width hex string == min over the 32-bit
 # value, and distinct chunks of one md5 are independent hash bits.
 _MD5_CALLS = _NUM_HASHES // 4
-
-
-def _spark_minhash_cols(shingles):
-    """8 minhash values: min over 8-hex-char chunks of 2 seeded md5s."""
-    cols = []
-    for g in range(_MD5_CALLS):
-        h = F.transform(shingles, _seeded_md5(g))
-
-        def _chunk(j: int):
-            return lambda x: F.substring(x, 8 * j + 1, 8)
-
-        for j in range(4):
-            cols.append(F.array_min(F.transform(h, _chunk(j))).alias(f"m{4 * g + j}"))
-    return cols
 
 
 def _sql_minhash_cols() -> str:
@@ -2796,7 +2776,10 @@ def s21_graph_ann_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixtures (testdata is read-only) and for any sane lakehouse layout
 # (new data lands in NEW directories). A long session that rewrites
 # parquet in place under the same path must call
-# clear_knn_edge_memo() (tests do, via the fixture teardown rule).
+# clear_knn_edge_memo(). Nothing in the repo calls it today: the test
+# suite's one session only reads the read-only fixture directories
+# through the memoized queries, and tables a test writes land in fresh
+# temporary directories, which are new keys.
 _KNN_EDGE_MEMO: dict = {}
 
 
@@ -3782,7 +3765,8 @@ def ppjoin_exact(d: DataFrame, k: int = 3) -> DataFrame:
 # bit-identical in DuckDB), serve it with the scaffolded graph walk,
 # and GATE recall@5 >= 4/5 for the fixed query panel.
 #
-# Two measured facts pin the design (tools/s25_proto.py):
+# Two measured facts pin the design
+# (`git show eb998ef:tools/s25_proto.py`):
 #   * on cleanly-separated clusters the raw bucket-kNN graph — and
 #     the NN-Descent-REFINED graph, whose top-k pruning deletes
 #     cross-cluster edges — are cluster-disconnected: the s21/s22
@@ -3831,7 +3815,7 @@ def _s25_centroids() -> list[list[int]]:
     cross-cluster |cos| = 0.28 vs within-cluster ~0.96; the first
     LCG-style arithmetic recipe left two centroids at cos 0.99 —
     sign corners are the deterministic recipe that actually
-    separates (tools/s25_proto.py)."""
+    separates (`git show eb998ef:tools/s25_proto.py`)."""
     import hashlib
 
     return [
@@ -4139,7 +4123,8 @@ def s25_clustered_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PRODUCTION construction path (s23's capped NN-Descent), served by
 # the s21 walk contract.
 #
-# Measured first (tools/s26_proto.py, sf0.01 n=500 / sf0.1 n=2000):
+# Measured first (`git show eb998ef:tools/s26_proto.py`, sf0.01 n=500 /
+# sf0.1 n=2000):
 #   * s24 as-is (refined round-2 graph, 3-round walk):  recall 0.33 —
 #     NN-Descent's top-k pruning deletes the cross-cluster edges, so
 #     the served graph is cluster-disconnected at full fixture exactly
@@ -4249,8 +4234,8 @@ FROM hits h CROSS JOIN total t"""
     "FULL-fixture deterministic clustered corpus (s25's derivation, "
     "NO probe sampling) is built by the PRODUCTION path — s23's "
     "capped NN-Descent — and served by the s21 walk (MIN entry, beam "
-    "8, top-5, 4 rounds). Measured (tools/s26_proto.py): the s24/s22 "
-    "paths as shipped score recall 0.33 at full fixture (top-k "
+    "8, top-5, 4 rounds). Measured (git show eb998ef:tools/s26_proto.py): "
+    "the s24/s22 paths as shipped score recall 0.33 at full fixture (top-k "
     "pruning deletes cross-cluster edges — cluster-disconnected, the "
     "published HNSW separated-cluster failure mode), so the "
     "registered serving index is refined-graph ∪ ring scaffold (the "

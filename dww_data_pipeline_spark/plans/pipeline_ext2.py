@@ -24,8 +24,6 @@ exact integers. House conventions per plans/registry.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2543,9 +2541,12 @@ def edit_distance_one_pairs(df: DataFrame, col: str) -> DataFrame:
 def _j15_variants(c: DataFrame) -> DataFrame:
     """The FastSS blocking relation: (c_name, key) variant pairs —
     deletion neighborhood for short strings, length buckets above
-    _J15_MAX_DEL_LEN.  Factored so tools/j15_candidate_study.py
-    measures the bucket-size distribution of exactly the keys the
-    join uses.
+    _J15_MAX_DEL_LEN.  ``edit_distance_one_pairs`` self-joins it on
+    ``key``: two names within distance 1 always share a key, so the
+    equi-join yields every candidate pair without the quadratic
+    compare, and candidate volume is the sum of squared key-bucket
+    sizes.  That distribution, over exactly these keys, was measured
+    by ``git show eb998ef:tools/j15_candidate_study.py``.
 
     r14 (guide §2.3): variant keys hash to fixed-width longs
     (xxhash64) before the dedup + self-join — the distinct exchanges
@@ -3148,9 +3149,7 @@ _BPE_TRAIN_MERGES = 16
 # hold ~10-100 M distinct tokens ≈ GBs with segmentations) the
 # distributed loop below runs unchanged.  1 M rows ≈ tens of MB on
 # the driver — far under spark.driver.maxResultSize.
-_BPE_DRIVER_VOCAB_CAP = int(
-    os.environ.get("SPARK_GRAFT_BPE_DRIVER_CAP", str(1 << 20))
-)
+_BPE_DRIVER_VOCAB_CAP = 1 << 20
 
 
 def _collect_under_cap(df: DataFrame) -> list | None:

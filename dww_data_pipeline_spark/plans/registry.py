@@ -66,58 +66,8 @@ def register(name: str, oracle: str | None, description: str = ""):
 # oldest latest-proof round; ties in registry order). The ~50-query
 # prefix below is what the next driver sample re-verifies. Regenerate
 # with `python tools/proof_ledger.py --rotate` after each round's
-# CORRECTNESS_r{N}.json lands (latest seen: r12); `--check` fails when stale.
+# CORRECTNESS_r{N}.json lands (latest seen: r14); `--check` fails when stale.
 _PRIORITY: list[str] = [
-    "dq22_embedding_psi",  # proof: never
-    "s26_serving_clustered_recall",  # proof: never
-    "ext_percentiles",  # proof: r7
-    "q13_customer_distribution",  # proof: r7
-    "q16_supplier_part_counts",  # proof: r7
-    "q7_volume_shipping",  # proof: r7
-    "q11_important_parts",  # proof: r7
-    "ext_asof_join",  # proof: r7
-    "a6b_density_pivot",  # proof: r7
-    "q17_small_quantity_revenue",  # proof: r7
-    "ext_range_frame",  # proof: r7
-    "ext_unpivot",  # proof: r7
-    "ev1_funnel",  # proof: r7
-    "ev2_retention",  # proof: r7
-    "v1_vocabulary_topk",  # proof: r7
-    "v2_bigram_topk",  # proof: r7
-    "e1_embedding_dim_stats",  # proof: r7
-    "e2_embedding_quantize_int8",  # proof: r7
-    "v3_tfidf_topk",  # proof: r7
-    "e3_embedding_normalize",  # proof: r7
-    "e6_pca_project",  # proof: r7
-    "t34_kneser_ney_score",  # proof: r7
-    "d23_cdc_chunking",  # proof: r7
-    "st15_stream_lm_score",  # proof: r7
-    "c3_perplexity_mixture",  # proof: r7
-    "d3_ngram_jaccard",  # proof: r7
-    "d8_dedup_pipeline",  # proof: r7
-    "d4_simhash",  # proof: r7
-    "d5_embedding_near_dups",  # proof: r7
-    "s1_ann_brute_force_topk",  # proof: r7
-    "s3_ann_range_search",  # proof: r7
-    "d9_dedup_keep_best",  # proof: r7
-    "t33_bpe_train",  # proof: r7
-    "d7_embedding_lsh_near_dups",  # proof: r7
-    "a3_search_mappings",  # proof: r7
-    "p3_compound_filter",  # proof: r7
-    "p4_having_filter",  # proof: r7
-    "o6_depth_limit",  # proof: r7
-    "p5_sentinel_filter",  # proof: r7
-    "w7_empty_group_removal",  # proof: r7
-    "a7_merge_sum_by_cleaned_key",  # proof: r7
-    "set_intersect_except",  # proof: r7
-    "f_geo_interp_suite",  # proof: r7
-    "q3_shipping_priority",  # proof: r7
-    "ext_rollup_counts",  # proof: r7
-    "ext_approx_distinct",  # proof: r7
-    "w2_run_lengths",  # proof: r7
-    "w3_consecutive_pairs",  # proof: r7
-    "st14_stream_pattern_match",  # proof: r7
-    "ext_orc_roundtrip",  # proof: r7
     "d25_span_scrub",  # proof: r8
     "f1_parse_credit_notes",  # proof: r8
     "f9_normalize_release_dates",  # proof: r8
@@ -368,6 +318,56 @@ _PRIORITY: list[str] = [
     "v7_simpson_diversity",  # proof: r12
     "pr8_degree_assortativity",  # proof: r12
     "ev17_pattern_match",  # proof: r12
+    "ext_percentiles",  # proof: r14
+    "q13_customer_distribution",  # proof: r14
+    "q16_supplier_part_counts",  # proof: r14
+    "q7_volume_shipping",  # proof: r14
+    "q11_important_parts",  # proof: r14
+    "ext_asof_join",  # proof: r14
+    "a6b_density_pivot",  # proof: r14
+    "q17_small_quantity_revenue",  # proof: r14
+    "ext_range_frame",  # proof: r14
+    "ext_unpivot",  # proof: r14
+    "ev1_funnel",  # proof: r14
+    "ev2_retention",  # proof: r14
+    "v1_vocabulary_topk",  # proof: r14
+    "v2_bigram_topk",  # proof: r14
+    "e1_embedding_dim_stats",  # proof: r14
+    "e2_embedding_quantize_int8",  # proof: r14
+    "v3_tfidf_topk",  # proof: r14
+    "e3_embedding_normalize",  # proof: r14
+    "e6_pca_project",  # proof: r14
+    "dq22_embedding_psi",  # proof: r14
+    "t34_kneser_ney_score",  # proof: r14
+    "d23_cdc_chunking",  # proof: r14
+    "st15_stream_lm_score",  # proof: r14
+    "c3_perplexity_mixture",  # proof: r14
+    "d3_ngram_jaccard",  # proof: r14
+    "d8_dedup_pipeline",  # proof: r14
+    "d4_simhash",  # proof: r14
+    "d5_embedding_near_dups",  # proof: r14
+    "s1_ann_brute_force_topk",  # proof: r14
+    "s3_ann_range_search",  # proof: r14
+    "d9_dedup_keep_best",  # proof: r14
+    "s26_serving_clustered_recall",  # proof: r14
+    "t33_bpe_train",  # proof: r14
+    "d7_embedding_lsh_near_dups",  # proof: r14
+    "a3_search_mappings",  # proof: r14
+    "p3_compound_filter",  # proof: r14
+    "p4_having_filter",  # proof: r14
+    "o6_depth_limit",  # proof: r14
+    "p5_sentinel_filter",  # proof: r14
+    "w7_empty_group_removal",  # proof: r14
+    "a7_merge_sum_by_cleaned_key",  # proof: r14
+    "set_intersect_except",  # proof: r14
+    "f_geo_interp_suite",  # proof: r14
+    "q3_shipping_priority",  # proof: r14
+    "ext_rollup_counts",  # proof: r14
+    "ext_approx_distinct",  # proof: r14
+    "w2_run_lengths",  # proof: r14
+    "w3_consecutive_pairs",  # proof: r14
+    "st14_stream_pattern_match",  # proof: r14
+    "ext_orc_roundtrip",  # proof: r14
 ]
 # <!-- priority:end -->
 

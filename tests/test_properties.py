@@ -2081,7 +2081,8 @@ class TestS26ServingClusteredRecall:
         assert all(r["recall_overall"] >= 0.8 for r in rows)
 
     def test_refined_graph_alone_fails_the_gate(self, spark):
-        """Negative control (tools/s26_proto.py variant A): the
+        """Negative control (variant A of
+        `git show eb998ef:tools/s26_proto.py`): the
         NN-Descent round-2 graph WITHOUT the scaffold union is
         cluster-disconnected on the clustered corpus — the 4-round
         walk recovers only the entry vertex's cluster, recall well

@@ -103,3 +103,79 @@ def test_registry_prefix_spends_sample_on_unproven():
         f"prefix ({waiting[:5]}…) while proven ones occupy prefix slots "
         f"({wasted[:5]}…) — rotate registry._PRIORITY"
     )
+
+
+def _tool_imports(path: str):
+    """(module, names) for every ``from dww_data_pipeline_spark…`` /
+    ``from tools…`` import in ``path`` (module level and inside
+    functions)."""
+    import ast
+
+    prefixes = ("dww_data_pipeline_spark", "tools")
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.ImportFrom)
+            and node.level == 0
+            and (node.module or "").split(".")[0] in prefixes
+        ):
+            yield node.module, [a.name for a in node.names]
+
+
+def test_tools_imports_resolve():
+    """Every engine or tools name a kept ``tools/*.py`` imports still
+    exists, so a rename in the engine cannot silently break a tool
+    that no test runs.  Imports only; no Spark session starts."""
+    import glob
+    import importlib
+
+    sys.path.insert(0, REPO)
+    scripts = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    assert scripts
+    missing = []
+    for path in scripts:
+        for module, names in _tool_imports(path):
+            where = f"{os.path.relpath(path, REPO)}: {module}"
+            try:
+                mod = importlib.import_module(module)
+            except ImportError as e:
+                missing.append(f"{where} ({e})")
+                continue
+            missing += [f"{where}.{n}" for n in names if not hasattr(mod, n)]
+    assert not missing, f"unresolved tool imports: {missing}"
+
+
+def _cited_tools(text: str):
+    """(file name, pinned) for each ``tools/<name>.py|sh`` citation;
+    ``pinned`` when it has the ``git show <rev>:tools/…`` form."""
+    import re
+
+    pattern = re.compile(
+        r"(git show [0-9A-Za-z_.^~/-]+:)?(?<![\w/.-])tools/(\w+\.(?:py|sh))\b"
+    )
+    for m in pattern.finditer(text):
+        yield m.group(2), m.group(1) is not None
+
+
+def test_no_dangling_tool_citations():
+    """A code comment, docstring, test or doc that cites a tool names a
+    file that exists under ``tools/``, or pins a deleted one to the
+    commit that still has it (``git show <rev>:tools/<file>``)."""
+    import glob
+
+    sources = [os.path.join(REPO, "bench.py"), os.path.join(REPO, "README.md")]
+    for pattern in (
+        "dww_data_pipeline_spark/**/*.py",
+        "tests/*.py",
+        ".claude/skills/**/SKILL.md",
+    ):
+        sources += glob.glob(os.path.join(REPO, pattern), recursive=True)
+    dangling = []
+    for path in sorted(sources):
+        with open(path, encoding="utf-8") as f:
+            text = f.read()
+        for name, pinned in _cited_tools(text):
+            if not pinned and not os.path.exists(os.path.join(REPO, "tools", name)):
+                dangling.append(f"{os.path.relpath(path, REPO)}: tools/{name}")
+    assert not dangling, f"citations of missing tools: {sorted(set(dangling))}"

@@ -1,14 +1,16 @@
-"""Round-14 per-query profiling harness.
+"""Per-query profiling harness.
 
 Times individual registered queries via the noop sink (guide §1.4),
 records the Spark JOB COUNT each execution submits (the local-mode
 cost driver for the iterative/artifact queries — every job is a
 driver round-trip, and at sf0.1 the data is small enough that job
 submission dominates several multi-second queries), and optionally
-dumps `explain("formatted")` to plans/r14/<query>_<tag>.txt.
+dumps `explain("formatted")` to plans/<TAG>/<query>.txt.
 
 Usage:
-  python tools/r14_profile.py [--runs N] [--plans TAG] query [query ...]
+  python tools/query_profile.py [--runs N] [--plans TAG] query [query ...]
+
+Reads the tables under $SPARK_GRAFT_SF_DIR (bench.py's sf0.1 default).
 
 Prints one JSON line per query:
   {"query": ..., "best_sec": ..., "times": [...], "jobs_last_run": N}
@@ -32,13 +34,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--plans", default=None, help="write explain() as _<TAG>.txt")
+    ap.add_argument("--plans", default=None, help="write explain() to plans/<TAG>/")
     args = ap.parse_args()
 
     from dww_data_pipeline_spark.plans.registry import all_queries
     from dww_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("r14_profile")
+    spark = get_spark("query_profile")
     queries = all_queries()
     # warm up JVM + parquet footers (untimed)
     queries["a10_distinct"](spark, SF_DIR).write.format("noop").mode(
@@ -55,7 +57,7 @@ def main() -> None:
         times = []
         jobs_used = None
         for r in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r14_profile:{name}:{r}")
+            spark.sparkContext.setJobDescription(f"query_profile:{name}:{r}")
             j0 = max_job_id()
             t0 = time.perf_counter()
             q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -63,15 +65,13 @@ def main() -> None:
             jobs_used = max_job_id() - j0
         spark.sparkContext.setJobDescription(None)
         if args.plans:
-            os.makedirs(os.path.join(REPO, "plans", "r14"), exist_ok=True)
+            plan_dir = os.path.join(REPO, "plans", args.plans)
+            os.makedirs(plan_dir, exist_ok=True)
             df = q(spark, SF_DIR)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(
-                os.path.join(REPO, "plans", "r14", f"{name}_{args.plans}.txt"),
-                "w",
-            ) as f:
+            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
                 f.write(txt)
         print(
             json.dumps(
