@@ -1191,7 +1191,7 @@ def t25_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(sources/tokenizer_store.py, exactness inherited from the t36 "
     "parity gate) and BROADCASTS onto the exploded word stream; OOV "
     "words encode with the loaded merge list, in the driver under the "
-    "BPE driver cap and with encode_words above it (none here — the "
+    "driver-collect cap and with encode_words above it (none here — the "
     "store is trained on this corpus — but both paths are live and "
     "pytest-pinned on novel words). The store is built at most once "
     "per (application, sf_dir) — the session memo stands in for the "

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import local_rows_df
+from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df
 
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.plans.text_exprs import SQL_TOKS, spark_tokens
@@ -1675,12 +1675,41 @@ def _coarse_quantizer_stages(src: str, prefix: str) -> str:
 )"""
 
 
+def _coarse_rank(vec: list[int], cents: list[list[int]]) -> list[int]:
+    """Centroid indices ordered by exact squared distance to ``vec``,
+    ties to the lowest j — the order ``_ivfpq_coarse_expr``'s argmin
+    and the oracles' (d2, j) row_number use.  [0] is the assigned cell,
+    [:_IVF_NPROBE] a query's probe set."""
+    d2 = [sum((a - b) * (a - b) for a, b in zip(vec, c)) for c in cents]
+    return sorted(range(len(cents)), key=lambda j: (d2[j], j))
+
+
+def _coarse_probe_panel(
+    qrows: dict[int, list[int]], cents: list[list[int]]
+) -> list[tuple[int, list[int], list[int]]]:
+    """The fixed query panel (query_id, qv, cells) with each query's
+    ``_IVF_NPROBE`` probe cells frozen against ``cents``."""
+    return [
+        (qid, qrows[qid], _coarse_rank(qrows[qid], cents)[:_IVF_NPROBE])
+        for qid in _PQ_QUERIES
+    ]
+
+
 def _train_coarse(vq: DataFrame) -> list[list[int]]:
-    """Exact-integer coarse quantizer shared by s11 (IVF+PQ) and s2
-    (IVF-Flat): k=_IVF_K, init = the k lowest vec_ids, ONE Lloyd
-    iteration with round-half-up integer means ((2s+n)//(2n)) — every
-    step bit-identical to the oracle's unrolled CTE recurrence. One
-    partial-agg shuffle + a bounded (k x 64 integer) driver collect."""
+    """Exact-integer coarse quantizer shared by s11 (IVF+PQ), s2
+    (IVF-Flat), s19 and c8's store: k=_IVF_K, init = the k lowest
+    vec_ids, ONE Lloyd iteration with round-half-up integer means
+    ((2s+n)//(2n)) — every step bit-identical to the oracle's unrolled
+    CTE recurrence.  Two legs, chosen by the measured input size:
+    when ``vq`` (vec_id, vq) fits under the session's driver-collect
+    cap at 64 cells a row (16,384 vectors) it is collected once and
+    the init, assignment and update run in the driver in exact Python
+    integers (``_train_coarse_driver``); above the cap the distributed
+    plan runs — one partial-agg shuffle + a bounded (k x 64 integer)
+    driver collect."""
+    rows = collect_under_cap(vq.select("vec_id", "vq"), row_cells=64)
+    if rows is not None:
+        return _train_coarse_driver([(r[0], list(r[1])) for r in rows])
     cinit = vq.orderBy("vec_id").limit(_IVF_K).collect()
     ccents = [list(r["vq"]) for r in cinit]
     assigned = vq.select(
@@ -1697,6 +1726,23 @@ def _train_coarse(vq: DataFrame) -> list[list[int]]:
         s, n = int(r["s"]), int(r["n"])
         new[r["cluster"]][r["pos"]] = (2 * s + n) // (2 * n)
     return new
+
+
+def _train_coarse_driver(rows: list[tuple[int, list[int]]]) -> list[list[int]]:
+    """``_train_coarse`` over the collected (vec_id, vq) rows: the same
+    init, argmin (ties to the lowest j) and round-half-up update."""
+    rows = sorted(rows, key=lambda r: r[0])
+    cents = [v for _, v in rows[:_IVF_K]]
+    sums = [[0] * len(c) for c in cents]
+    counts = [0] * len(cents)
+    for _, v in rows:
+        j = _coarse_rank(v, cents)[0]
+        counts[j] += 1
+        sums[j] = [a + x for a, x in zip(sums[j], v)]
+    return [
+        [(2 * s + n) // (2 * n) for s in sums[j]] if n else list(c)
+        for j, (c, n) in enumerate(zip(cents, counts))
+    ]
 
 
 @register(
@@ -3135,32 +3181,20 @@ def t30_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_TRAIN_MERGES = 16
 
-# Driver-side trainer cap (r14, guide §4.1/§2.4): the merge recurrence
+# Driver-side trainer (r14, guide §4.1/§2.4): the merge recurrence
 # is information-sequential — each argmax depends on the previous
 # fold — so the distributed loop's floor is n_merges sequential driver
 # round-trips (~150 ms each locally = the measured wall of every
 # train-bearing query after the r13 fixes).  The vocabulary histogram
 # is BOUNDED (the loop's own scale invariant: the corpus collapses to
 # its word histogram once, and the merge table is already collected
-# driver-side), so when the measured vocabulary fits under this cap
-# the recurrence runs in the driver over the collected histogram —
-# the published single-node trainer shape — and ships the result as
-# the same bounded artifacts.  Above the cap (a 100 TB corpus can
-# hold ~10-100 M distinct tokens ≈ GBs with segmentations) the
-# distributed loop below runs unchanged.  1 M rows ≈ tens of MB on
-# the driver — far under spark.driver.maxResultSize.
-_BPE_DRIVER_VOCAB_CAP = 1 << 20
-
-
-def _collect_under_cap(df: DataFrame) -> list | None:
-    """Every row of the vocabulary-bounded ``df`` when it has at most
-    ``_BPE_DRIVER_VOCAB_CAP`` rows, else None.  The ``limit(cap + 1)``
-    guard is a no-op under the cap, so one collect returns the whole
-    frame.  Callers persist a corpus-scale ``df`` first, so their
-    above-cap path reuses what the probe computed."""
-    cap = _BPE_DRIVER_VOCAB_CAP
-    got = df.limit(cap + 1).collect()
-    return got if len(got) <= cap else None
+# driver-side), so when the measured vocabulary fits under the
+# session's driver-collect cap (session.collect_under_cap, one cell
+# per histogram row) the recurrence runs in the driver over the
+# collected histogram — the published single-node trainer shape — and
+# ships the result as the same bounded artifacts.  Above the cap (a
+# 100 TB corpus can hold ~10-100 M distinct tokens ≈ GBs with
+# segmentations) the distributed loop below runs unchanged.
 
 
 def _bpe_train_driver(
@@ -3530,7 +3564,7 @@ _t35b_attach_oracle()
 # vocabulary, and vocabulary-bounded hash aggregations.  The
 # re-encode leg runs the driver fold (_bpe_encode_driver, which the
 # s20 gate and t25b share and tests pin equal to encode_words) under
-# _BPE_DRIVER_VOCAB_CAP, and encode_words' 16 folds above it.  The
+# the driver-collect cap, and encode_words' 16 folds above it.  The
 # store lands in a fresh mkdtemp dir deleted after the bounded 5-row
 # result materializes (the ext_orc_roundtrip discipline — concurrent
 # runs never race on a shared path).
@@ -3632,7 +3666,7 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
             .persist()
         )
         try:
-            got = _collect_under_cap(vocab)
+            got = collect_under_cap(vocab)
             if got is not None:
                 re_hash = sum(
                     _md5_32_driver(f"{t}|{_bpe_encode_driver(t, merges)}")
@@ -3691,7 +3725,7 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
 # word histogram and doc counts (the corpus-scale shuffles); every
 # gate input after that is vocabulary-bounded — the frozen
 # segmentation, the merge list, the (step, tok, n) histogram.  Under
-# _BPE_DRIVER_VOCAB_CAP (the BPE trainer's switch) the inputs are
+# the driver-collect cap (the BPE trainer's switch) the inputs are
 # collected behind limit(cap + 1) guards, novel words encode through
 # the same Python greedy fold the driver trainer uses, and the exact
 # integer sums run in the driver; one local table of 5 sum rows
@@ -3738,7 +3772,7 @@ def tokenizer_staleness_gate(
     (st19's per-batch monitor).  Emits one row per grid step.
 
     All three inputs are vocabulary-bounded, so when each fits under
-    ``_BPE_DRIVER_VOCAB_CAP`` they are collected and the exact integer
+    the driver-collect cap they are collected and the exact integer
     sums run in the driver (novel words encode through
     ``_bpe_encode_driver``; in-vocabulary words read the stored
     n_sym, which is the same fold's output by the train->apply
@@ -3765,8 +3799,8 @@ def tokenizer_staleness_gate(
         .persist()
     )
     try:
-        seg_rows = _collect_under_cap(seg)
-        arr_rows = None if seg_rows is None else _collect_under_cap(arrivals)
+        seg_rows = collect_under_cap(seg)
+        arr_rows = None if seg_rows is None else collect_under_cap(arrivals)
         if arr_rows is not None:
             sums = _gate_sums_driver(
                 seg_rows, arr_rows, merges, first, n_steps, cumulative
@@ -4075,7 +4109,7 @@ def _s20_arrivals(d: DataFrame) -> tuple[DataFrame, DataFrame]:
 # on retrain — each one corpus-histogram shuffle, then vocabulary-
 # bounded folds), the arriving slice's histogram shuffles, and
 # bounded collects only: s20's gate core reads the persisted store
-# with its pinned schema and, under _BPE_DRIVER_VOCAB_CAP, sums the
+# with its pinned schema and, under the driver-collect cap, sums the
 # gate in the driver (the distributed gate plan runs above the cap);
 # then the 5-row gate table and the 1-row hash aggregates.  The
 # stores are KB-scale artifacts in mkdtemp dirs deleted after the
@@ -4235,7 +4269,7 @@ def c6_tokenizer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: s20's — one pass over the arriving slice builds the
 # (step, tok, n) histogram and per-step doc counts; the frozen store
-# reads with its pinned schema; under _BPE_DRIVER_VOCAB_CAP the sums
+# reads with its pinned schema; under the driver-collect cap the sums
 # run in the driver with the Python encode fold over NOVEL words
 # only, and above it the distributed gate plan (16 encode folds over
 # the arrived vocab, steps broadcast) runs instead.  The steps grid
@@ -4390,7 +4424,7 @@ def bpe_train_segmentation_df(
     r14 (guide §4.1/§2.4, the r13 verdict's top ask): the recurrence
     is information-sequential, so the distributed loop's wall is
     n_merges sequential argmax driver round-trips.  The histogram is
-    vocabulary-BOUNDED; when it fits under ``_BPE_DRIVER_VOCAB_CAP``
+    vocabulary-BOUNDED; when it fits under the driver-collect cap
     the whole loop runs driver-side over the collected histogram (ONE
     Spark job — the corpus-scale word-histogram shuffle that was
     always required — instead of 17+) and ships the identical merges
@@ -4412,7 +4446,7 @@ def bpe_train_segmentation_df(
     from dww_data_pipeline_spark.session import bounded_loop_shuffle
 
     try:
-        got = _collect_under_cap(hist)
+        got = collect_under_cap(hist)
         if got is not None:
             merges, seg_rows = _bpe_train_driver(
                 [(r[0], r[1]) for r in got], n_merges

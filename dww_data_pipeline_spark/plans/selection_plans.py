@@ -49,7 +49,7 @@ published algorithms cited above.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.session import local_rows_df
@@ -1635,6 +1635,78 @@ def index_staleness_gate(
     )
 
 
+def _round_half_up(x: float, digits: int) -> float:
+    """Spark's ``round(x, digits)`` on a double: the shortest decimal
+    repr of ``x`` rounded HALF_UP (java.math.BigDecimal.valueOf)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP)
+    )
+
+
+def index_staleness_gate_driver(
+    assigned: list[tuple[int, int, list[int], int]],
+    queries: list[tuple[int, list[int], list[int]]],
+    n_steps: int,
+    k: int,
+    n_queries: int,
+) -> list[Row]:
+    """``index_staleness_gate`` over COLLECTED inputs, in the driver:
+    ``assigned`` rows are (vec_id, step, vq, cluster) and ``queries``
+    rows (query_id, qv, cells).  The same predicates, the same
+    (d2, vec_id) top-k order and exact integers; the two ratios use
+    Spark's HALF_UP ``round(…, 6)``.  Returns the rows the DataFrame
+    gate would collect, so c8 under the driver-collect cap and s19
+    agree field for field."""
+    from collections import Counter
+    from heapq import nsmallest
+
+    nk = n_queries * k
+    cells = {r[3] for r in assigned}
+    base = Counter(r[3] for r in assigned if r[1] == 0)
+    n1 = sum(base.values())
+    # (d2, vec_id) per query and row: the top-k order of both legs
+    order = [
+        [
+            (sum((a - b) * (a - b) for a, b in zip(r[2], qv)), r[0])
+            for r in assigned
+        ]
+        for _, qv, _ in queries
+    ]
+    out = []
+    for s in range(n_steps + 1):
+        cur = [i for i, r in enumerate(assigned) if r[1] <= s]
+        if not cur:
+            continue
+        hits = 0
+        for key, (_, _, probe) in zip(order, queries):
+            probed = [i for i in cur if assigned[i][3] in probe]
+            truth = {key[i][1] for i in nsmallest(k, cur, key=key.__getitem__)}
+            hits += sum(
+                key[i][1] in truth
+                for i in nsmallest(k, probed, key=key.__getitem__)
+            )
+        arrived = Counter(assigned[i][3] for i in cur if assigned[i][1] >= 1)
+        n2 = sum(arrived.values())
+        drift = sum(abs(base[c] * n2 - arrived[c] * n1) for c in cells)
+        out.append(
+            Row(
+                step=s,
+                n_vectors=len(cur),
+                n_arrived=n2,
+                hits_at_k=hits,
+                recall_at_k=_round_half_up(float(hits) / float(nk), 6),
+                drift_num=drift,
+                l1_assign_drift=0.0
+                if n2 == 0
+                else _round_half_up(float(drift) / (float(n1) * float(n2)), 6),
+                rebuild=5 * hits < 4 * nk or (n2 > 0 and 2 * drift > n1 * n2),
+            )
+        )
+    return out
+
+
 @register(
     "s19_index_staleness_gate",
     oracle=_s19_oracle(),
@@ -1658,11 +1730,10 @@ def index_staleness_gate(
 )
 def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dww_data_pipeline_spark.plans.pipeline_ext2 import (
-        _IVF_K,
-        _IVF_NPROBE,
         _PQ_QUERIES,
         _PQ_TOPK,
         _PQ_VQ_SPARK,
+        _coarse_probe_panel,
         _ivfpq_coarse_expr,
         _train_coarse,
     )
@@ -1691,19 +1762,10 @@ def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(r["vec_id"]): list(r["vq"])
             for r in q.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
         }
-        qdata = []
-        for qid in _PQ_QUERIES:
-            qvec = qrows[qid]
-            ranked = sorted(
-                range(_IVF_K),
-                key=lambda j: (
-                    sum((qvec[i] - ccents[j][i]) ** 2 for i in range(64)),
-                    j,
-                ),
-            )
-            qdata.append((qid, qvec, ranked[:_IVF_NPROBE]))
         queries = local_rows_df(
-            spark, qdata, "query_id long, qv array<long>, cells array<int>"
+            spark,
+            _coarse_probe_panel(qrows, ccents),
+            "query_id long, qv array<long>, cells array<int>",
         )
         out = index_staleness_gate(
             assigned,
@@ -1737,11 +1799,17 @@ def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the decision and unrolls BOTH quantizers via the prefixed CTE
 # generator) catches a missing, wrong, or corrupted swap.
 #
-# Scale shape: s19's gate (one frozen-centroid corpus pass + bounded
-# histogram shuffles + the |Q|-bounded exact-truth probe) plus at
-# most one more _train_coarse run (one partial-agg shuffle, k x 64
-# integer collect); the artifact is KB-scale; the swap is two
-# renames.  Bounded collects only (5-row gate, k-row fingerprints).
+# Scale shape: two legs, chosen by the measured corpus size.  Under
+# the session's driver-collect cap (64 cells a vector: 16,384
+# vectors) each quantizer training and the gate are ONE collect of
+# the vector table, with the Lloyd step, assignment, probe panel and
+# every gate field computed in the driver in exact integers.  Above
+# the cap the distributed plans run: s19's gate (one frozen-centroid
+# corpus pass + bounded histogram shuffles + the |Q|-bounded
+# exact-truth probe) plus at most one more _train_coarse run (one
+# partial-agg shuffle, k x 64 integer collect).  On both legs the
+# artifact is KB-scale, written and read back with its own schema,
+# and the swap is two renames.
 # ---------------------------------------------------------------------------
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -127,6 +127,30 @@ def local_rows_df(spark: SparkSession, rows, schema):
             stacklevel=2,
         )
         return spark.createDataFrame(rows, struct)
+
+
+# Driver-collect budget, in cells (row count x the cells each row
+# carries).  Bounded artifacts — a vocabulary histogram, a coarse
+# quantizer's training table, a gate's inputs — run their exact
+# recurrences in the driver when they fit under it, and keep their
+# distributed plans above it (a 100 TB corpus can hold ~10-100 M
+# distinct tokens or vectors).  1 M cells is tens of MB on the driver,
+# far under spark.driver.maxResultSize.
+_DRIVER_CELL_CAP = 1 << 20
+
+
+def collect_under_cap(df: DataFrame, row_cells: int = 1) -> list | None:
+    """Every row of the bounded ``df`` when it has at most
+    ``_DRIVER_CELL_CAP // row_cells`` rows, else None.  ``row_cells``
+    is the width a row costs the driver: 1 for a (tok, n) histogram
+    row, 64 for a 64-wide vector, so a vector table is capped at
+    16,384 rows.  The ``limit(cap + 1)`` guard is a no-op under the
+    cap, so one collect returns the whole frame.  Callers persist a
+    corpus-scale ``df`` first, so their above-cap path reuses what the
+    probe computed."""
+    cap = _DRIVER_CELL_CAP // row_cells
+    got = df.limit(cap + 1).collect()
+    return got if len(got) <= cap else None
 
 
 @contextmanager

@@ -47,6 +47,11 @@ from dww_data_pipeline_spark.operators.similarity import (
 )
 
 
+# The store's own schema: reads pin it, so a load infers nothing from
+# the files.
+IVF_CENTROIDS_SCHEMA = "list_id int, centroid array<double>"
+
+
 def build_ivf_index(
     corpus: DataFrame,
     id_col: str,
@@ -66,7 +71,7 @@ def build_ivf_index(
     cent_df = local_rows_df(
         spark,
         [(int(j), [float(x) for x in c]) for j, c in enumerate(centroids)],
-        "list_id int, centroid array<double>",
+        IVF_CENTROIDS_SCHEMA,
     )
     cent_df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "centroids")
@@ -80,6 +85,20 @@ def build_ivf_index(
         os.path.join(out_dir, "vectors")
     )
     return len(centroids)
+
+
+def load_ivf_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
+    """The persisted IVF quantizer, list_id-ordered, as a (k, dim)
+    float array.  Bounded collect: n_lists rows."""
+    rows = sorted(
+        spark.read.schema(IVF_CENTROIDS_SCHEMA)
+        .parquet(os.path.join(index_dir, "centroids"))
+        .collect(),
+        key=lambda r: r["list_id"],
+    )
+    if not rows:
+        raise ValueError(f"empty centroid table under {index_dir}")
+    return np.array([r["centroid"] for r in rows], dtype="float64")
 
 
 def ivf_index_topk(
@@ -99,13 +118,7 @@ def ivf_index_topk(
     non-probed partitions — the scan is nprobe/n_lists of the lake
     by layout, not by luck.
     """
-    cent_rows = sorted(
-        spark.read.parquet(os.path.join(index_dir, "centroids")).collect(),
-        key=lambda r: r["list_id"],
-    )
-    if not cent_rows:
-        raise ValueError(f"empty centroid table under {index_dir}")
-    centroids = np.array([r["centroid"] for r in cent_rows], dtype="float64")
+    centroids = load_ivf_centroids(spark, index_dir)
     if not 1 <= nprobe <= len(centroids):
         raise ValueError(f"nprobe must be in [1, {len(centroids)}], got {nprobe}")
 
@@ -141,8 +154,15 @@ def ivf_index_topk(
 # runs against the PERSISTED quantizer, and a rebuild verdict
 # triggers train-fresh + atomic directory swap
 # (sources.maintenance.swap_dir).  The artifact is k x 64 integers —
-# KB-scale at any corpus size.
+# KB-scale at any corpus size.  Training and the gate each have two
+# legs: while the vector table fits under the session's driver-collect
+# cap (64 cells a vector, so 16,384 vectors) it is collected once and
+# the exact integers run in the driver; above the cap the distributed
+# plans run unchanged.  The store write, swap and read-backs are the
+# same on both legs.
 # ---------------------------------------------------------------------------
+
+COARSE_CENTROIDS_SCHEMA = "j int, cv array<long>"
 
 
 def build_coarse_store(vq: DataFrame, out_dir: str) -> int:
@@ -156,7 +176,7 @@ def build_coarse_store(vq: DataFrame, out_dir: str) -> int:
     local_rows_df(
         spark,
         [(j, [int(x) for x in cv]) for j, cv in enumerate(cents)],
-        "j int, cv array<long>",
+        COARSE_CENTROIDS_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "centroids")
     )
@@ -167,7 +187,9 @@ def load_coarse_centroids(spark: SparkSession, store_dir: str) -> list[list[int]
     """The persisted quantizer, j-ordered.  Bounded collect: k x 64
     integers."""
     rows = sorted(
-        spark.read.parquet(os.path.join(store_dir, "centroids")).collect(),
+        spark.read.schema(COARSE_CENTROIDS_SCHEMA)
+        .parquet(os.path.join(store_dir, "centroids"))
+        .collect(),
         key=lambda r: r["j"],
     )
     if not rows:
@@ -210,53 +232,65 @@ def coarse_index_lifecycle_tick(
     step's rebuild verdict, trains a fresh quantizer over
     ``retrain_vq`` into a sibling temp dir and swaps it in atomically.
     Returns {"rebuild", "swapped", "gate"} (gate = the bounded
-    (n_steps + 1)-row decision table as Rows)."""
+    (n_steps + 1)-row decision table as Rows).
+
+    Two legs, chosen by the measured size of ``q``: under the
+    session's driver-collect cap at 64 cells a row (16,384 vectors)
+    one collect of (vec_id, vq, step) feeds the assignment, the probe
+    panel and ``index_staleness_gate_driver`` in the driver; above it
+    the assignment folds the centroids into the plan and the
+    DataFrame ``index_staleness_gate`` runs distributed.  Both emit
+    the same rows (pinned by tests/test_ann_index.py)."""
     import shutil
     import tempfile
 
     from dww_data_pipeline_spark.plans.pipeline_ext2 import (
-        _IVF_NPROBE,
         _PQ_QUERIES,
         _PQ_TOPK,
+        _coarse_probe_panel,
+        _coarse_rank,
         _ivfpq_coarse_expr,
-        _train_coarse,
     )
     from dww_data_pipeline_spark.plans.selection_plans import (
         index_staleness_gate,
+        index_staleness_gate_driver,
     )
+    from dww_data_pipeline_spark.session import collect_under_cap
     from dww_data_pipeline_spark.sources.maintenance import swap_dir
 
     ccents = load_coarse_centroids(spark, store_dir)
-    k = len(ccents)
-    assigned = q.select(
-        "vec_id",
-        "step",
-        "vq",
-        F.expr(_ivfpq_coarse_expr(ccents)).alias("cluster"),
-    )
-    # frozen probe panel: 3 x 64 integer collect (e7 discipline)
-    qrows = {
-        int(r["vec_id"]): list(r["vq"])
-        for r in q.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-    }
-    qdata = []
-    for qid in _PQ_QUERIES:
-        qvec = qrows[qid]
-        ranked = sorted(
-            range(k),
-            key=lambda j: (
-                sum((qvec[i] - ccents[j][i]) ** 2 for i in range(64)),
-                j,
-            ),
+    gate_args = dict(n_steps=n_steps, k=_PQ_TOPK, n_queries=len(_PQ_QUERIES))
+    rows = collect_under_cap(q.select("vec_id", "vq", "step"), row_cells=64)
+    if rows is not None:
+        # driver leg: assignment, probe panel and gate from one collect
+        qrows = {r[0]: list(r[1]) for r in rows if r[0] in _PQ_QUERIES}
+        assigned = [
+            (r[0], r[2], list(r[1]), _coarse_rank(r[1], ccents)[0])
+            for r in rows
+        ]
+        gate = index_staleness_gate_driver(
+            assigned, _coarse_probe_panel(qrows, ccents), **gate_args
         )
-        qdata.append((qid, qvec, ranked[:_IVF_NPROBE]))
-    queries = local_rows_df(
-        spark, qdata, "query_id long, qv array<long>, cells array<int>"
-    )
-    gate = index_staleness_gate(
-        assigned, queries, n_steps=n_steps, k=_PQ_TOPK,
-        n_queries=len(_PQ_QUERIES),
-    ).collect()  # bounded: n_steps + 1 rows
+    else:
+        # frozen probe panel: 3 x 64 integer collect (e7 discipline)
+        qrows = {
+            int(r["vec_id"]): list(r["vq"])
+            for r in q.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
+        }
+        assigned = q.select(
+            "vec_id",
+            "step",
+            "vq",
+            F.expr(_ivfpq_coarse_expr(ccents)).alias("cluster"),
+        )
+        queries = local_rows_df(
+            spark,
+            _coarse_probe_panel(qrows, ccents),
+            "query_id long, qv array<long>, cells array<int>",
+        )
+        gate = index_staleness_gate(
+            assigned, queries, **gate_args
+        ).collect()  # bounded: n_steps + 1 rows
     final = max(gate, key=lambda r: r["step"])
     swapped = False
     if final["rebuild"]:

@@ -29,7 +29,7 @@ serves from parquet).  This module is that path:
   segmentation is a DataFrame sized for ``F.broadcast`` onto an
   exploded token stream (how t25's artifact-backed variant joins it
   — no corpus-side shuffle) or for a bounded driver collect (how the
-  s20/c6/st19 gate core reads it under the BPE driver cap).
+  s20/c6/st19 gate core reads it under the driver-collect cap).
 
 * ``encode_words``: segment ANY word column with a LOADED merge list
   — the frozen-tokenizer encode path.  Novel (out-of-vocabulary)
@@ -37,7 +37,7 @@ serves from parquet).  This module is that path:
   application, not a vocabulary lookup: each learned merge applies
   in rank order as one exact greedy fold (merge, then skip).  This
   is what s20's staleness gate runs over ARRIVING docs the frozen
-  tokenizer has never seen above the BPE driver cap (under it, the
+  tokenizer has never seen above the driver-collect cap (under it, the
   gate encodes them with the same fold in Python,
   ``plans.pipeline_ext2._bpe_encode_driver``).
 
@@ -71,7 +71,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import local_rows_df
+from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df
 
 # The store's on-disk schemas, written by ``build_tokenizer_store`` and
 # pinned on every read (no parquet schema-inference job per load).
@@ -244,14 +244,11 @@ def fertility_from_store(
     shuffle total, zero training work per call.
 
     The corpus words missing from the store are vocabulary-bounded
-    too: under ``_BPE_DRIVER_VOCAB_CAP`` they are collected and
+    too: under the session's driver-collect cap they are collected and
     encoded by the driver fold (``_bpe_encode_driver``); above it
     ``encode_words`` runs over the same persisted frame and the
     bounded |source| x |lang| report is collected before release."""
-    from dww_data_pipeline_spark.plans.pipeline_ext2 import (
-        _bpe_encode_driver,
-        _collect_under_cap,
-    )
+    from dww_data_pipeline_spark.plans.pipeline_ext2 import _bpe_encode_driver
     from dww_data_pipeline_spark.plans.text_exprs import spark_tokens
 
     nsym = load_segmentation(spark, store_dir).select("tok", "n_sym")
@@ -263,7 +260,7 @@ def fertility_from_store(
     )
     try:
         merges = load_merge_list(spark, store_dir)
-        got = _collect_under_cap(novel)
+        got = collect_under_cap(novel)
         if got is not None:
             enc = local_rows_df(
                 spark,
@@ -375,11 +372,11 @@ def tokenizer_lifecycle_tick(
 
     Scale shape: the gate is s20's (one corpus-scale pass over the
     arriving slice upstream of this call; inside, vocabulary-bounded
-    sums in the driver under the BPE driver cap, or encode folds in
+    sums in the driver under the driver-collect cap, or encode folds in
     a distributed plan above it); the rebuild is one t33 training
     run; the swap is two renames.  Nothing here holds corpus-scale
     data on the driver — the collected gate inputs are capped at
-    ``_BPE_DRIVER_VOCAB_CAP`` rows and the gate table is
+    ``session._DRIVER_CELL_CAP`` rows and the gate table is
     n_steps + 1 rows.
     """
     from dww_data_pipeline_spark.plans.pipeline_ext2 import (

@@ -28,16 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.operators.similarity import _nearest_centroid_col
-
-
-def _load_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
-    rows = sorted(
-        spark.read.parquet(os.path.join(index_dir, "centroids")).collect(),
-        key=lambda r: r["list_id"],
-    )
-    if not rows:
-        raise ValueError(f"empty centroid table under {index_dir}")
-    return np.array([r["centroid"] for r in rows], dtype="float64")
+from dww_data_pipeline_spark.sources.ann_index import load_ivf_centroids
 
 
 def ann_ingest_batch(
@@ -70,7 +61,7 @@ def stream_ann_ingest(
     the started query (availableNow — drain then stop; swap the
     trigger for always-on mode). Centroids load once per run."""
     spark = stream_vectors.sparkSession
-    centroids = _load_centroids(spark, index_dir)
+    centroids = load_ivf_centroids(spark, index_dir)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         ann_ingest_batch(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from dww_data_pipeline_spark.sources.ann_index import (
     build_ivf_index,
     ivf_index_topk,
+    load_ivf_centroids,
 )
 from dww_data_pipeline_spark.sources.catalog import load_table
 
@@ -121,7 +122,6 @@ class TestStreamingAnnIngest:
 
         from dww_data_pipeline_spark.streaming.ann_ingest import (
             ann_ingest_batch,
-            _load_centroids,
             compact_ann_delta,
             read_indexed_vectors,
             stream_ann_ingest,
@@ -154,7 +154,7 @@ class TestStreamingAnnIngest:
         assert view.count() == total
         # streamed vectors landed under the SAME list the batch
         # assigner would pick (frozen quantizer)
-        cents = _load_centroids(spark, idx)
+        cents = load_ivf_centroids(spark, idx)
         from dww_data_pipeline_spark.operators.similarity import (
             _nearest_centroid_col,
         )
@@ -227,7 +227,6 @@ class TestIndexStalenessGate:
             index_staleness_gate,
         )
         from dww_data_pipeline_spark.streaming.ann_ingest import (
-            _load_centroids,
             read_indexed_vectors,
             stream_ann_ingest,
         )
@@ -258,7 +257,7 @@ class TestIndexStalenessGate:
         )
         q.awaitTermination(120)
 
-        cents = _load_centroids(spark, idx)
+        cents = load_ivf_centroids(spark, idx)
         vq = F.expr(_PQ_VQ_SPARK)
         # fixed query panel with probe cells frozen against the
         # PERSISTED centroids (shared by both sides)
@@ -459,3 +458,93 @@ class TestCoarseIndexLifecycle:
         )
         assert not res["rebuild"] and not res["swapped"]
         assert self._fingerprint(spark, store) == pre
+
+
+def _planted_drift_corpus() -> tuple[list, int]:
+    """TestCoarseIndexLifecycle's rebuild corpus: base over four clear
+    cells, every arrival in a new pattern nearest cell 3."""
+    base = [(i, [100 * (i % 4)] * 64, 0) for i in range(16)]
+    arrivals = [(100 + i, [500] * 64, 1 + (i % 2)) for i in range(8)]
+    return base + arrivals, 2
+
+
+def _seeded_random_corpus() -> tuple[list, int]:
+    """60 vectors with vq cells in 0..49 (many distance ties), half the
+    base and the rest arriving over 3 steps."""
+    import random
+
+    rng = random.Random(7)
+    rows = [
+        (i, [rng.randrange(50) for _ in range(64)], 0 if i < 30 else 1 + i % 3)
+        for i in range(60)
+    ]
+    return rows, 3
+
+
+class TestCoarseLifecycleLegs:
+    """c8's lifecycle tick runs in the driver under the session's
+    driver-collect cap and as the distributed plans above it (cap 0).
+    The cap only picks the execution strategy: the gate rows, the
+    verdict and the swapped store must be identical."""
+
+    @staticmethod
+    def _tick(spark, tmp_path, rows, n_steps, tag):
+        from dww_data_pipeline_spark.session import local_rows_df
+        from dww_data_pipeline_spark.sources.ann_index import (
+            build_coarse_store,
+            coarse_index_lifecycle_tick,
+            load_coarse_centroids,
+        )
+
+        q = local_rows_df(spark, rows, "vec_id long, vq array<long>, step int")
+        store = str(tmp_path / tag)
+        build_coarse_store(q.filter("step = 0").select("vec_id", "vq"), store)
+        res = coarse_index_lifecycle_tick(
+            spark, store, q, retrain_vq=q.select("vec_id", "vq"),
+            n_steps=n_steps,
+        )
+        gate = sorted(res["gate"], key=lambda r: r["step"])
+        return (
+            [r.asDict() for r in gate],
+            [tuple(type(v) for v in r) for r in gate],
+            (res["rebuild"], res["swapped"]),
+            load_coarse_centroids(spark, store),
+        )
+
+    @pytest.mark.parametrize(
+        "corpus", [_planted_drift_corpus, _seeded_random_corpus],
+        ids=["planted_drift", "seeded_random"],
+    )
+    def test_driver_and_distributed_legs_agree(
+        self, spark, tmp_path, monkeypatch, corpus
+    ):
+        from dww_data_pipeline_spark import session
+        from dww_data_pipeline_spark.plans import pipeline_ext2 as pe2
+        from dww_data_pipeline_spark.plans import selection_plans as sp
+
+        calls: list[str] = []
+        for mod, name in (
+            (sp, "index_staleness_gate"),
+            (sp, "index_staleness_gate_driver"),
+            (pe2, "_train_coarse_driver"),
+        ):
+            real = getattr(mod, name)
+
+            def spy(*a, _real=real, _name=name, **kw):
+                calls.append(_name)
+                return _real(*a, **kw)
+
+            monkeypatch.setattr(mod, name, spy)
+
+        rows, n_steps = corpus()
+        drv = self._tick(spark, tmp_path, rows, n_steps, "driver")
+        assert "index_staleness_gate_driver" in calls
+        assert "_train_coarse_driver" in calls
+        assert "index_staleness_gate" not in calls
+        calls.clear()
+        monkeypatch.setattr(session, "_DRIVER_CELL_CAP", 0)
+        dist = self._tick(spark, tmp_path, rows, n_steps, "distributed")
+        assert calls == ["index_staleness_gate"]
+
+        assert len(drv[0]) == n_steps + 1
+        assert drv == dist

@@ -10,6 +10,7 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
+from dww_data_pipeline_spark import session
 from dww_data_pipeline_spark.plans.registry import REGISTRY, all_queries
 from dww_data_pipeline_spark.sources.catalog import load_table
 
@@ -1331,7 +1332,7 @@ class TestBpeTrain:
 class TestBpeDriverTrainer:
     def test_driver_and_distributed_paths_agree(self, spark, sf_dir, monkeypatch):
         """The r14 driver-side trainer (vocabulary under
-        _BPE_DRIVER_VOCAB_CAP → the recurrence runs over the collected
+        the driver-collect cap → the recurrence runs over the collected
         histogram) must produce the identical merge list AND the
         identical final segmentation as the distributed fold loop it
         short-circuits — the cap is a pure execution-strategy switch."""
@@ -1340,7 +1341,7 @@ class TestBpeDriverTrainer:
         docs = load_table(spark, sf_dir, "documents")
         m_drv, seg_drv = pe2.bpe_train_segmentation_df(docs)
         rows_drv = sorted(tuple(r) for r in seg_drv.collect())
-        monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+        monkeypatch.setattr(session, "_DRIVER_CELL_CAP", 0)
         m_dist, seg_dist = pe2.bpe_train_segmentation_df(docs)
         rows_dist = sorted(tuple(r) for r in seg_dist.collect())
         assert m_drv == m_dist
@@ -1357,7 +1358,7 @@ class TestBpeDriverTrainer:
             (r["step"], r["pair"], r["merged"], r["n"])
             for r in REGISTRY["t33_bpe_train"].spark(spark, sf_dir).collect()
         )
-        monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+        monkeypatch.setattr(session, "_DRIVER_CELL_CAP", 0)
         merges, _ = pe2.bpe_train_segmentation_df(
             load_table(spark, sf_dir, "documents")
         )

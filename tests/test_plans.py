@@ -19,6 +19,21 @@ def _loaded():
     _load_all()
 
 
+@pytest.fixture(scope="module")
+def built_queries(_loaded, spark, sf_dir) -> dict[str, tuple[int, str]]:
+    """Every registered query built ONCE: name -> (schema field count,
+    optimized-plan string).  The whole-registry checks below read this
+    instead of each running all the builders again."""
+    out = {}
+    for name, q in REGISTRY.items():
+        df = q.spark(spark, sf_dir)
+        out[name] = (
+            len(df.schema.fields),
+            df._jdf.queryExecution().optimizedPlan().toString(),
+        )
+    return out
+
+
 class TestRegistry:
     def test_every_oracle_has_a_query(self):
         qs, os_ = all_queries(), all_oracles()
@@ -29,12 +44,12 @@ class TestRegistry:
         for q in REGISTRY.values():
             assert q.description, f"{q.name} missing description"
 
-    def test_all_queries_analyzable(self, spark, sf_dir):
+    def test_all_queries_analyzable(self, built_queries):
         # schema resolution exercises every expression tree without
         # executing jobs
-        for name, q in REGISTRY.items():
-            df = q.spark(spark, sf_dir)
-            assert df.schema.fields, name
+        assert set(built_queries) == set(REGISTRY)
+        for name, (n_fields, _) in built_queries.items():
+            assert n_fields, name
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -431,15 +446,15 @@ class TestRound4LateAdditions:
 
 
 class TestGlobalWindowDiscipline:
-    def test_no_partitionless_windows_anywhere(self, spark, sf_dir):
+    def test_no_partitionless_windows_anywhere(self, built_queries):
         """No registered query may plan a partition-less WindowExec
         (the 'No Partition Defined ... single partition' runtime
         warning): global carries must be explicit bounded reduces
         (see t14), partitioned windows, or TakeOrdered."""
         import re
 
-        for name, q in REGISTRY.items():
-            lp = q.spark(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+        assert set(built_queries) == set(REGISTRY)
+        for name, (_, lp) in built_queries.items():
             for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", lp):
                 head = m.group(1).split(",")[0]
                 # a window spec lists partition cols first; if the

@@ -17,6 +17,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from dww_data_pipeline_spark import session
 from dww_data_pipeline_spark.plans.registry import REGISTRY, all_queries
 from dww_data_pipeline_spark.sources.catalog import load_table
 from dww_data_pipeline_spark.sources.tokenizer_store import (
@@ -175,11 +176,9 @@ class TestArtifactBackedTwins:
         self, spark, sf_dir, monkeypatch
     ):
         """Corpus words missing from the store encode in the driver
-        under the BPE driver cap and through ``encode_words`` above it
+        under the driver-collect cap and through ``encode_words`` above it
         (cap 0); the report must not change.  The store is trained on
         one English sentence, so most corpus words are novel."""
-        from dww_data_pipeline_spark.plans import pipeline_ext2 as pe2
-
         spark_encodes = _spy_encode_words(monkeypatch)
         d = load_table(spark, sf_dir, "documents")
         path = tempfile.mkdtemp(prefix="dww_tokstore_fert_")
@@ -196,7 +195,7 @@ class TestArtifactBackedTwins:
                 map(tuple, fertility_from_store(d, spark, path).collect())
             )
             assert not spark_encodes
-            monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+            monkeypatch.setattr(session, "_DRIVER_CELL_CAP", 0)
             dist = sorted(
                 map(tuple, fertility_from_store(d, spark, path).collect())
             )
@@ -329,7 +328,7 @@ def _planted_shift_gate(spark) -> list:
 
 class TestGateDriverPath:
     """The gate's integer sums run in the driver when every input fits
-    under ``_BPE_DRIVER_VOCAB_CAP`` and as a distributed plan above it;
+    under the session's driver-collect cap and as a distributed plan above it;
     the cap is a pure execution-strategy switch, so both paths must
     emit identical rows (the TestBpeDriverTrainer pattern)."""
 
@@ -351,7 +350,7 @@ class TestGateDriverPath:
         drv = sorted(map(tuple, run()))
         assert calls and set(calls) == {"_gate_sums_driver"}
         calls.clear()
-        monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+        monkeypatch.setattr(session, "_DRIVER_CELL_CAP", 0)
         dist = sorted(map(tuple, run()))
         assert calls and set(calls) == {"_gate_sums_spark"}
         return drv, dist
@@ -379,13 +378,11 @@ class TestGateDriverPath:
     def test_t36_rows_identical(self, spark, sf_dir, monkeypatch):
         """t36's re-encode leg: the driver fold under the cap,
         ``encode_words`` at cap 0 — the same five fingerprints."""
-        from dww_data_pipeline_spark.plans import pipeline_ext2 as pe2
-
         spark_encodes = _spy_encode_words(monkeypatch)
         q = REGISTRY["t36_tokenizer_artifact_parity"]
         drv = sorted(map(tuple, q.spark(spark, sf_dir).collect()))
         assert not spark_encodes
-        monkeypatch.setattr(pe2, "_BPE_DRIVER_VOCAB_CAP", 0)
+        monkeypatch.setattr(session, "_DRIVER_CELL_CAP", 0)
         dist = sorted(map(tuple, q.spark(spark, sf_dir).collect()))
         assert spark_encodes
         assert len(drv) == 5 and drv == dist
