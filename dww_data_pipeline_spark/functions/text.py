@@ -41,32 +41,24 @@ def bpe_ish_token_count(text: Column) -> Column:
     return pieces.cast("long")
 
 
-def punct_ratio(text: Column) -> Column:
-    """Punctuation chars / total chars (0 when empty)."""
-    n = F.length(text)
-    p = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
-    return F.when(n > 0, p / n).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    """Fraction of tokens that are stopwords."""
-    toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    n = F.size(toks)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality score in [0,1]: rewards moderate length,
     penalizes punctuation soup, rewards stopword presence. The exact
-    formula is arbitrary but deterministic (and mirrored in the
-    DuckDB oracle)."""
+    formula is arbitrary but deterministic; the double operations run
+    in the same order as the DuckDB oracle (``text_plans._QUALITY_SQL``),
+    so t2's scores compare bit-exact."""
     n_tok = token_count(text).cast("double")
-    len_score = F.least(n_tok / 100.0, F.lit(1.0))
-    sw = stopword_ratio(text)
-    pr = punct_ratio(text)
-    score = 0.5 * len_score + 0.3 * F.least(sw * 5.0, F.lit(1.0)) + 0.2 * (1.0 - pr)
-    return F.round(score, 6)
+    toks = tokens(F.lower(text))
+    sw_hits = F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS["en"]))).cast("double")
+    sw_ratio = sw_hits / F.greatest(F.size(toks), F.lit(1))
+    n = F.length(text)
+    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", "")).cast("double")
+    pr = punct / F.greatest(n, F.lit(1))
+    return (
+        F.lit(0.5) * F.least(n_tok / 100.0, F.lit(1.0))
+        + F.lit(0.3) * F.least(sw_ratio * 5.0, F.lit(1.0))
+        + F.lit(0.2) * (F.lit(1.0) - pr)
+    )
 
 
 def lang_id(text: Column) -> Column:

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _window(entity: str, order: list[str]) -> Window:
+def _window(entity: str, order: list[str | Column]) -> Window:
     return Window.partitionBy(entity).orderBy(*order)
 
 
@@ -115,7 +115,7 @@ def directional_filter(
     return df.withColumn("_keep", keep).filter(F.col("_keep")).drop("_keep")
 
 
-def first_per_group(df: DataFrame, entity: str, order: list[str]) -> DataFrame:
+def first_per_group(df: DataFrame, entity: str, order: list[str | Column]) -> DataFrame:
     """W6: retain the first row per entity in timeline order
     (reference dwwApi.js:250-252 keeps rels[0])."""
     w = _window(entity, order)

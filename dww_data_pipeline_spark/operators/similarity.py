@@ -1,21 +1,23 @@
 """Similarity search over embedding columns (north-star extension).
 
-Two paths:
-
 * ``brute_force_topk`` — exact cosine top-k: broadcast the query set,
   one JVM-side cosine per (row, query), per-query top-k via window.
   The baseline and the verifier. Scales linearly in corpus size ×
   queries (fine when |queries| is small — the common batch case).
-* ``lsh_buckets`` / ``lsh_topk`` — random-hyperplane LSH (Charikar
-  STOC 2002; LSH framework per Indyk & Motwani, STOC 1998): each vector
-  hashed to a b-bit bucket by sign of dot with b fixed pseudo-random
-  hyperplanes (deterministic seed). Top-k runs only within matching
-  buckets (multi-probe over the query's bucket), turning the scan
-  into a bucket-pruned lookup — the 100 TB path.
+* ``ivf_topk`` — IVF (inverted-file) top-k over a coarse quantizer
+  trained on a driver-side sample; the in-memory twin of the
+  persisted index in ``sources/ann_index.py``.
+* ``bucket_pairs_cos_arrow`` / ``bucket_local_components_arrow`` /
+  ``bucket_knn_arrow`` — per-LSH-bucket dense scoring stages for the
+  random-hyperplane LSH plans (Charikar STOC 2002; the oracle-checked
+  bucket-pruned top-k is ``s4_ann_lsh_topk`` in
+  ``plans/dedup_plans.py``).
+* ``gram_fixed_point`` / ``pca_quality`` / ``pca_project`` — PCA from
+  one bounded Gram-matrix collect.
 
-Hyperplanes are generated driver-side from a seeded RNG and shipped
-as literal arrays (they are tiny: b × dim floats), so executors do
-zero Python work.
+Hyperplanes and centroids are generated driver-side from a seeded RNG
+and shipped as literal arrays (they are tiny: b × dim floats), so
+executors do zero Python work.
 """
 
 from __future__ import annotations
@@ -25,8 +27,6 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from dww_data_pipeline_spark.session import local_rows_df
 
 from dww_data_pipeline_spark.functions.vectors import cosine
 
@@ -77,28 +77,6 @@ def _ident(name: str) -> str:
             "(the parse-once SQL builders take names, not Columns)"
         )
     return "`" + name.replace("`", "``") + "`"
-
-
-def _plane_dot_sql(vec_sql: str, plane) -> str:
-    """Spark-SQL text of the hyperplane dot (parse-once build — same
-    Py4J-lambda-cost finding as the PCA/centroid builders)."""
-    arr = ", ".join(repr(float(x)) + "D" for x in plane)
-    return (
-        f"aggregate(zip_with({_ident(vec_sql)}, array({arr}), "
-        f"(x, y) -> x * y), 0D, (a, x) -> a + x)"
-    )
-
-
-def lsh_bucket_col(vec_col: str, planes: np.ndarray):
-    """Bucket id expression: sign-bit concatenation over hyperplanes."""
-    if len(planes) == 0:
-        return F.lit(0).cast("long")
-    terms = " + ".join(
-        f"(CASE WHEN {_plane_dot_sql(vec_col, plane)} >= 0 "
-        f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i, plane in enumerate(planes)
-    )
-    return F.expr(f"({terms})")
 
 
 def _kmeans_centroids(
@@ -160,55 +138,6 @@ def _centroid_probe_col(vec_col: str, centroids: np.ndarray, nprobe: int):
     )
 
 
-def _pairwise_cos_arrow(
-    pairs: DataFrame, query_id: str, id_col: str, va: str, vb: str
-) -> DataFrame:
-    """Rowwise cosine over candidate pairs via mapInPandas (one numpy
-    einsum per Arrow batch) — the Arrow twin of the expression-path
-    cosine for the LSH/IVF scoring stage, where candidates after
-    bucket pruning still scale with the corpus. Same zero-norm → 0.0
-    semantics and half-up 6-decimal rounding. (Bucket-grouped scoring
-    with thresholds lives in ``bucket_pairs_cos_arrow``.)"""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(query_id, pairs.schema[query_id].dataType, True),
-            T.StructField(id_col, pairs.schema[id_col].dataType, True),
-            T.StructField("cos", T.DoubleType(), True),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            dims = [len(v) for v in pdf[va] if v is not None] or [1]
-            zero = [0.0] * dims[0]
-            A = np.asarray(
-                [list(v) if v is not None else zero for v in pdf[va]], dtype="float64"
-            )
-            B = np.asarray(
-                [list(v) if v is not None else zero for v in pdf[vb]], dtype="float64"
-            )
-            dot = np.einsum("ij,ij->i", A, B)
-            denom = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            cos = np.where(denom > 0, dot / np.maximum(denom, 1e-300), 0.0)
-            cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id],
-                    id_col: pdf[id_col],
-                    "cos": cos,
-                }
-            )
-
-    return pairs.mapInPandas(score, schema=schema)
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -220,7 +149,6 @@ def ivf_topk(
     seed: int = 42,
     query_id: str = "query_id",
     nprobe: int = 1,
-    scorer: str = "expr",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: corpus vectors are
     assigned to their nearest coarse centroid; each query scans its
@@ -251,202 +179,11 @@ def ivf_topk(
         )
     )
     pairs = c_assigned.join(F.broadcast(q_assigned), "_list")
-    if scorer == "arrow":
-        scored = _pairwise_cos_arrow(
-            pairs.select(query_id, id_col, vec_col, "_qv"),
-            query_id, id_col, vec_col, "_qv",
-        )
-    else:
-        scored = pairs.select(
-            query_id,
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("_qv")), 6).alias("cos"),
-        )
-    return _topk(scored, query_id, id_col, k)
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    query_id: str = "query_id",
-    n_probe: int = 1,
-    scorer: str = "expr",
-) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's LSH
-    bucket(s).
-
-    ``n_probe`` is the recall knob — margin-aware multi-probe (Lv et
-    al., VLDB 2007): beyond the exact bucket, also probe the buckets
-    reached by flipping the ``n_probe - 1`` hyperplane bits with the
-    smallest |dot| margin (the bits most likely to be on the wrong
-    side for true neighbors). Candidate cost scales ~linearly with
-    n_probe while recall rises steeply, so at 100 TB this trades a
-    bounded extra scan for recall WITHOUT re-bucketing the corpus —
-    the probe expansion happens only on the tiny broadcast query side.
-    The unit tests measure recall against brute force rather than
-    assuming it.
-    """
-    if not 1 <= n_probe <= bits + 1:
-        raise ValueError(f"n_probe must be in [1, bits+1], got {n_probe}")
-    planes = _hyperplanes(dim, bits, seed)
-    c = corpus.withColumn("_bucket", lsh_bucket_col(vec_col, planes))
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("_qv")).withColumn(
-        "_dots",
-        F.expr(
-            "array("
-            + ", ".join(_plane_dot_sql("_qv", plane) for plane in planes)
-            + ")"
-        ),
+    scored = pairs.select(
+        query_id,
+        id_col,
+        F.round(cosine(F.col(vec_col), F.col("_qv")), 6).alias("cos"),
     )
-    # bucket from the materialized dots (same sign rule as
-    # lsh_bucket_col), then the margin-ranked single-bit flips
-    q = q.withColumn(
-        "_bucket",
-        F.expr(
-            "aggregate(zip_with(_dots, sequence(0, size(_dots)-1), "
-            "(d, i) -> IF(d >= 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ),
-    )
-    if n_probe > 1:
-        q = q.withColumn(
-            "_flips",
-            F.expr(
-                "transform(slice(array_sort(zip_with(transform(_dots, d -> abs(d)), "
-                f"sequence(0, size(_dots)-1), (m, i) -> struct(m, i))), 1, {n_probe - 1}), "
-                "p -> p.i)"
-            ),
-        ).withColumn(
-            "_bucket",
-            F.explode(
-                F.expr(
-                    "concat(array(_bucket), transform(_flips, "
-                    "i -> _bucket ^ shiftleft(CAST(1 AS BIGINT), i)))"
-                )
-            ),
-        )
-    # a corpus row lives in exactly one bucket and probe buckets are
-    # distinct, so no (query, id) pair appears twice — no dedup needed
-    pairs = c.join(F.broadcast(q), "_bucket")
-    if scorer == "arrow":
-        scored = _pairwise_cos_arrow(
-            pairs.select(query_id, id_col, vec_col, "_qv"),
-            query_id, id_col, vec_col, "_qv",
-        )
-    else:
-        scored = pairs.select(
-            query_id,
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("_qv")), 6).alias("cos"),
-        )
-    return _topk(scored, query_id, id_col, k)
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Arrow-batched numpy variant of ``brute_force_topk``.
-
-    The expression-path cosine goes through ``zip_with``/``aggregate``
-    higher-order functions, which Spark evaluates INTERPRETED (no
-    whole-stage codegen) — fine for verification, but ~2 orders of
-    magnitude off a vectorized matmul per element. This variant ships
-    the (small, bounded) query matrix in the task closure, scores each
-    Arrow batch with one ``V @ Q.T``, and PRESELECTS the per-batch
-    top-k per query (``argpartition``) so the shuffle into the global
-    ranking window carries at most k rows per (query, batch) instead
-    of the full batch × queries cross product — the property that
-    makes this the scan path at corpus scale.
-
-    Semantics vs the expression path: same zero-norm → cosine 0.0
-    (null vectors score 0.0 everywhere), same half-up 6-decimal
-    rounding, same deterministic top-k tiebreak. NOT bit-exact: the
-    expression path multiplies float32 elements in single precision
-    while this path computes in float64, so cosines within ~1e-6 of a
-    rounding boundary can differ in the 6th decimal (the test compares
-    with that tolerance).
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    id_type = corpus.schema[id_col].dataType
-    qid_type = queries.schema[query_id].dataType
-    schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type, True),
-            T.StructField(id_col, id_type, True),
-            T.StructField("cos", T.DoubleType(), True),
-        ]
-    )
-
-    qrows = queries.select(query_id, vec_col).collect()  # bounded: the query set
-    if not qrows:
-        return _topk(
-            local_rows_df(corpus.sparkSession, [], schema), query_id, id_col, k
-        )
-    qids = [r[query_id] for r in qrows]
-    dims = [len(r[vec_col]) for r in qrows if r[vec_col] is not None]
-    if dims:
-        dim = dims[0]
-        zero = [0.0] * dim
-        Q = np.asarray(
-            [list(r[vec_col]) if r[vec_col] is not None else zero for r in qrows],
-            dtype="float64",
-        )
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    else:
-        # every query vector is null → zero-norm semantics: cosine 0.0
-        # against the whole corpus (what the expression path yields)
-        zero = None
-        Qn = None
-
-    def _round6_half_up(x: "np.ndarray") -> "np.ndarray":
-        # numpy rounds half-even; Spark's F.round is HALF_UP (away from
-        # zero) — mirror it so ties break the same way
-        return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if Qn is None:
-                S = np.zeros((len(pdf), len(qids)))
-            else:
-                vecs = [v if v is not None else zero for v in pdf[vec_col]]
-                V = np.asarray([list(v) for v in vecs], dtype="float64")
-                Vn = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-                )
-                S = _round6_half_up(Vn @ Qn.T)  # (batch, queries)
-            ids = pdf[id_col].to_numpy()
-            n = len(pdf)
-            take = min(k, n)
-            # per-(batch, query) top-k preselection: global top-k over
-            # per-batch top-ks is identical, shuffle shrinks ~n/k.
-            # lexsort on (-cos, id) matches the window's tiebreak, so
-            # boundary ties select the same rows the window would.
-            out_q, out_i, out_c = [], [], []
-            for j, qid in enumerate(qids):
-                order = np.lexsort((ids, -S[:, j]))[:take]
-                out_q.extend([qid] * len(order))
-                out_i.extend(ids[order])
-                out_c.extend(S[order, j])
-            yield pd.DataFrame({query_id: out_q, id_col: out_i, "cos": out_c})
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, schema=schema)
     return _topk(scored, query_id, id_col, k)
 
 
@@ -716,38 +453,6 @@ def gram_fixed_point(
 
     partials = df.select(vec_col).mapInPandas(partial, schema=out_schema)
     return partials.groupBy("pos").agg(F.sum("s_fp").alias("s_fp"))
-
-
-def pca_components(
-    df: DataFrame, vec_col: str = "embedding", k: int = 8, dim: int = 64
-) -> tuple[list[list[float]], list[float]]:
-    """Top-k principal directions of the corpus second-moment matrix.
-
-    Same driver-bounded-training shape as the IVF quantizer: the
-    DISTRIBUTED part reduces the corpus to a dim x dim Gram matrix
-    (``gram_fixed_point`` — one dim^2 partial per partition, never
-    vectors on the shuffle), the collect is bounded at dim^2 rows by
-    construction, and the eigendecomposition runs driver-side on the
-    tiny matrix. Accumulation is fixed-point (floor(prod * 1e8) as
-    BIGINT), so the Gram matrix — and therefore the components — is
-    deterministic across runs and partitionings. Eigenvector signs
-    are canonicalized (largest-|w| entry positive). Returns
-    (components, eigenvalues), components ordered by descending
-    eigenvalue.
-    """
-    cells = gram_fixed_point(df, vec_col, dim=dim).collect()  # dim^2 rows
-    g = np.zeros((dim, dim))
-    for r in cells:
-        g[r["pos"] // dim][r["pos"] % dim] = r["s_fp"] / 1e8
-    vals, vecs = np.linalg.eigh(g)
-    order = np.argsort(vals)[::-1][:k]
-    comps: list[list[float]] = []
-    for o in order:
-        v = vecs[:, o]
-        if v[int(np.argmax(np.abs(v)))] < 0:
-            v = -v
-        comps.append([float(x) for x in v])
-    return comps, [float(vals[o]) for o in order]
 
 
 def pca_project(

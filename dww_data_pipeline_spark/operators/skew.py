@@ -2,52 +2,16 @@
 intrinsic to the data').
 
 AQE's skew-join splitting handles most cases automatically
-(spark.sql.adaptive.skewJoin.enabled, on in session.py); these
-helpers cover the two patterns AQE cannot fix:
-
-* **salted aggregation** — a groupBy where one key holds a large
-  share of all rows ends up with one straggler reduce task. Salting
-  splits each key into N subkeys (partial agg), then combines
-  (final agg over the tiny salted result).
-* **salted broadcast-side join** — joining a skewed fact key against
-  a small-but-not-broadcastable dim: explode the dim N ways, salt the
-  fact side randomly, join on (key, salt).
+(spark.sql.adaptive.skewJoin.enabled, on in session.py); this helper
+covers the pattern AQE cannot fix: joining a skewed fact key against
+a small-but-not-broadcastable dim — explode the dim N ways, salt the
+fact side, join on (key, salt).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_count(
-    df: DataFrame, keys: list[str], salt_buckets: int = 16, count_col: str = "cnt"
-) -> DataFrame:
-    """Two-phase count: groupBy(keys + salt) → groupBy(keys).
-
-    Deterministic salt (hash of all columns mod N) so repeated runs
-    agree; the point is distribution, not randomness.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").cast("long").alias(count_col))
-
-
-def salted_sum(
-    df: DataFrame,
-    keys: list[str],
-    value: Column,
-    salt_buckets: int = 16,
-    sum_col: str = "total",
-) -> DataFrame:
-    """Two-phase sum with decimal-exact combination."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
-    ).withColumn("_v", value)
-    partial = salted.groupBy(*keys, "_salt").agg(F.sum("_v").alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias(sum_col))
 
 
 def salted_join_skewed_fact(

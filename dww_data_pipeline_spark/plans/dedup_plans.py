@@ -5,8 +5,8 @@ Cross-engine determinism: the oracle-checked variants derive every
 hash from md5 (identical hex output in Spark, DuckDB, Python) and
 compare minhash values as strings (min over md5-hex is a valid
 minhash and lexicographic string order is engine-portable). The
-production scale path uses xxhash64 (JVM-side, no string churn) and
-is covered by the pytest suite instead (operators/dedup.py).
+shared duplicate-grouping step (connected components) lives in
+operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -472,8 +472,7 @@ def d8_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash (md5-parity variant — oracle-checkable; production uses
-# xxhash64, operators/dedup.py)
+# SimHash (md5-parity variant — oracle-checkable)
 # ---------------------------------------------------------------------------
 
 _SH_BITS = 32
@@ -517,7 +516,7 @@ def _simhash_oracle() -> str:
     description="SimHash document signatures: per-bit majority vote over "
     "token hashes (32 bits = md5 hex-digit low bits — engine-portable); "
     "near-dups share signatures / small Hamming distance (north-star "
-    "SimHash dedup; production 64-bit xxhash64 variant in operators/dedup)",
+    "SimHash dedup)",
 )
 def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -406,7 +406,7 @@ def t24_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # next to the fact table) is localCheckpoint-ed so the three wedge
 # legs and the degree pass read the materialized edges instead of
 # re-running the fact self-join per leg (same lineage-truncation
-# discipline as operators/dedup.py:283).
+# discipline as operators/dedup.connected_components).
 # ---------------------------------------------------------------------------
 
 _TRI_MIN_CO = 8  # orders two suppliers must share to form an edge

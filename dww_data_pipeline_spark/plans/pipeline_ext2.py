@@ -24,7 +24,7 @@ exact integers. House conventions per plans/registry.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df
@@ -589,10 +589,7 @@ def s10_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) // (2 * n)
 
         # asymmetric-distance tables per query, folded to literals
-        qrows = {
-            r["vec_id"]: list(r["vq"])
-            for r in vq.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-        }
+        qrows = _query_rows(vq)
         final = vq.select(
             "vec_id",
             *[
@@ -1695,6 +1692,52 @@ def _coarse_probe_panel(
     ]
 
 
+def _query_rows(vq: DataFrame) -> dict[int, list[int]]:
+    """The fixed query panel's vectors from ``vq`` (vec_id, vq): a
+    bounded ``len(_PQ_QUERIES)`` x 64 integer collect."""
+    return {
+        int(r["vec_id"]): list(r["vq"])
+        for r in vq.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
+    }
+
+
+def _exact_d2_col(qv: list[int]) -> Column:
+    """Exact integer squared L2 from ``vq`` to the query vector ``qv``,
+    folded to a BIGINT array literal (loop-form aggregate/zip_with
+    inside whole-stage codegen)."""
+    qlit = "array(" + ", ".join(f"{int(x)}L" for x in qv) + ")"
+    return F.expr(
+        f"aggregate(zip_with(vq, {qlit}, (x, y) -> (x - y) * (x - y)), "
+        "0L, (acc, v) -> acc + v)"
+    )
+
+
+def _ivf_probe_topk(
+    assigned: DataFrame, panel: list[tuple[int, list[int], list[int]]]
+) -> DataFrame:
+    """IVF-Flat query pass shared by s2 and s14: for each (query_id,
+    qv, cells) of the probe panel, score the ``assigned`` rows
+    (vec_id, vq, cluster) inside the probed cells exactly and keep the
+    top ``_PQ_TOPK`` by (d2, vec_id)."""
+    from functools import reduce
+
+    from pyspark.sql import Window
+
+    per_q = [
+        assigned.filter(F.col("cluster").isin(cells)).select(
+            F.lit(qid).cast("long").alias("query_id"),
+            "vec_id",
+            _exact_d2_col(qv).alias("d2"),
+        )
+        for qid, qv, cells in panel
+    ]
+    u = reduce(lambda a, b: a.unionByName(b), per_q)
+    w = Window.partitionBy("query_id").orderBy("d2", "vec_id")
+    return u.select(
+        "query_id", "vec_id", "d2", F.row_number().over(w).alias("rank")
+    ).filter(F.col("rank") <= _PQ_TOPK)
+
+
 def _train_coarse(vq: DataFrame) -> list[list[int]]:
     """Exact-integer coarse quantizer shared by s11 (IVF+PQ), s2
     (IVF-Flat), s19 and c8's store: k=_IVF_K, init = the k lowest
@@ -1845,22 +1888,12 @@ def s11_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         # ---- queries: probe nprobe coarse cells, ADC over residuals
-        qrows = {
-            r["vec_id"]: list(r["vq"])
-            for r in vq.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-        }
         # ONE pass over the encoded corpus: per query, a CASE over its
         # probed cells selects the matching lookup-table sum (NULL =
         # row not in this query's probe set), stacked via explode —
         # no per-(query, cell) branch unions re-running the encode scan
         per_query = []
-        for qid in _PQ_QUERIES:
-            qv = qrows[qid]
-            cd = sorted(
-                (sum((qv[i] - c[i]) ** 2 for i in range(64)), j)
-                for j, c in enumerate(ccents)
-            )
-            probed = [j for _, j in cd[:_IVF_NPROBE]]
+        for qid, qv, probed in _coarse_probe_panel(_query_rows(vq), ccents):
             dist = F.lit(None).cast("long")
             for cl in probed:
                 qr = [qv[i] - ccents[cl][i] + 4_000_000 for i in range(64)]
@@ -4764,15 +4797,15 @@ def _c2_attach_oracle() -> None:
     "whole curation chain re-verifies through the summary.",
 )
 def c2_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from dww_data_pipeline_spark.functions import text as tx
     from dww_data_pipeline_spark.plans.pipeline_ext2 import c1_curation_pipeline
-    from dww_data_pipeline_spark.plans.text_plans import _quality_col
 
     d = load_table(spark, sf_dir, "documents")
     stats = d.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(spark_tokens(F.col("text")))).cast("long").alias("n_tokens"),
         F.countDistinct("lang").alias("n_langs"),
-        F.sum((_quality_col() >= 0.5).cast("long")).alias("n_high_quality"),
+        F.sum((tx.quality_score(F.col("text")) >= 0.5).cast("long")).alias("n_high_quality"),
     )
     disp = c1_curation_pipeline(spark, sf_dir)
     counts = disp.agg(
@@ -4889,26 +4922,12 @@ def s15_ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned = vq.select(
             "vec_id", "vq", F.expr(_ivfpq_coarse_expr(ccents)).alias("cluster")
         ).persist()
-        qrows = {
-            int(r["vec_id"]): list(r["vq"])
-            for r in vq.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-        }
+        qrows = _query_rows(vq)
         branches = []
         truth = []
         for qid in _PQ_QUERIES:
-            qvec = qrows[qid]
-            ranked_cells = sorted(
-                range(_IVF_K),
-                key=lambda j: (
-                    sum((qvec[i] - ccents[j][i]) ** 2 for i in range(64)),
-                    j,
-                ),
-            )
-            qlit = "array(" + ", ".join(f"{int(x)}L" for x in qvec) + ")"
-            d2 = F.expr(
-                f"aggregate(zip_with(vq, {qlit}, (x, y) -> (x - y) * (x - y)), "
-                "0L, (acc, v) -> acc + v)"
-            )
+            ranked_cells = _coarse_rank(qrows[qid], ccents)
+            d2 = _exact_d2_col(qrows[qid])
             truth.append(
                 vq.select(
                     F.lit(qid).cast("long").alias("query_id"),
@@ -4917,9 +4936,8 @@ def s15_ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             for p in range(1, _IVF_K + 1):
-                probe = [int(j) for j in ranked_cells[:p]]
                 branches.append(
-                    assigned.filter(F.col("cluster").isin(probe)).select(
+                    assigned.filter(F.col("cluster").isin(ranked_cells[:p])).select(
                         F.lit(p).cast("long").alias("nprobe"),
                         F.lit(qid).cast("long").alias("query_id"),
                         "vec_id",

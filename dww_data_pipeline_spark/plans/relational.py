@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.session import local_rows_df
 
+from dww_data_pipeline_spark.operators import sequence as seq
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.sources.catalog import load_table
 
@@ -450,18 +451,11 @@ def o2_topk_count_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(reference GetWeta.py:184-187 top search hit; dwwApi.js:250-252)",
 )
 def o5_first_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_orderdate"), "o_orderkey")
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("o_orderdate"),
-        )
+    return seq.first_per_group(o, "o_custkey", [F.desc("o_orderdate"), "o_orderkey"]).select(
+        "o_custkey",
+        "o_orderkey",
+        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("o_orderdate"),
     )
 
 

@@ -1735,6 +1735,7 @@ def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PQ_VQ_SPARK,
         _coarse_probe_panel,
         _ivfpq_coarse_expr,
+        _query_rows,
         _train_coarse,
     )
 
@@ -1758,13 +1759,9 @@ def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # fixed query panel: vectors + their frozen probe cells (3x64
         # integer collect — bounded by construction, e7 discipline)
-        qrows = {
-            int(r["vec_id"]): list(r["vq"])
-            for r in q.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-        }
         queries = local_rows_df(
             spark,
-            _coarse_probe_panel(qrows, ccents),
+            _coarse_probe_panel(_query_rows(q), ccents),
             "query_id long, qv array<long>, cells array<int>",
         )
         out = index_staleness_gate(

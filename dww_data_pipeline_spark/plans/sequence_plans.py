@@ -10,7 +10,7 @@ tie-break (SURVEY §7.3 order-dependency hazard).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.operators import density as density_ops
@@ -101,15 +101,14 @@ def w2_run_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w3_consecutive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _orders(spark, sf_dir)
-    w = Window.partitionBy("o_custkey").orderBy(*_ORDER)
-    return (
-        o.withColumn("next_orderkey", F.lead("o_orderkey").over(w))
-        .withColumn("next_priority", F.lead("o_orderpriority").over(w))
-        .filter(
-            F.col("next_orderkey").isNotNull()
-            & (F.col("o_orderpriority") != F.col("next_priority"))
-        )
-        .select("o_custkey", "o_orderkey", "o_orderpriority", "next_orderkey", "next_priority")
+    out = seq.consecutive_pairs(
+        o, "o_custkey", _ORDER, ["o_orderkey", "o_orderpriority"],
+        drop_same_on="o_orderpriority",
+    )
+    return out.select(
+        "o_custkey", "o_orderkey", "o_orderpriority",
+        F.col("next_o_orderkey").alias("next_orderkey"),
+        F.col("next_o_orderpriority").alias("next_priority"),
     )
 
 

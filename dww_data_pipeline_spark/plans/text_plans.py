@@ -314,24 +314,6 @@ _QUALITY_SQL = """
 """
 
 
-def _quality_col():
-    text = F.col("text")
-    n_tok = tx.token_count(text).cast("double")
-    toks = tx.tokens(F.lower(text))
-    sw_hits = F.size(F.filter(toks, lambda t: t.isin("the", "and", "of", "to", "a"))).cast(
-        "double"
-    )
-    sw_ratio = sw_hits / F.greatest(F.size(toks), F.lit(1))
-    n = F.length(text)
-    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", "")).cast("double")
-    pr = punct / F.greatest(n, F.lit(1))
-    return (
-        F.lit(0.5) * F.least(n_tok / 100.0, F.lit(1.0))
-        + F.lit(0.3) * F.least(sw_ratio * 5.0, F.lit(1.0))
-        + F.lit(0.2) * (F.lit(1.0) - pr)
-    )
-
-
 @register(
     "t2_quality_scores",
     oracle=f"""
@@ -345,7 +327,7 @@ def _quality_col():
 )
 def t2_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", _quality_col().alias("quality"))
+    return d.select("doc_id", tx.quality_score(F.col("text")).alias("quality"))
 
 
 def _lang_oracle() -> str:
@@ -1047,7 +1029,7 @@ def t17_curriculum_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("quality", "doc_id")
     return (
-        d.select("doc_id", "source", _quality_col().alias("quality"))
+        d.select("doc_id", "source", tx.quality_score(F.col("text")).alias("quality"))
         .withColumn("decile", F.ntile(10).over(w).cast("long"))
     )
 

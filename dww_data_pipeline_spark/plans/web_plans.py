@@ -1374,17 +1374,12 @@ SELECT query_id, vec_id, d2, rank FROM (
     "Cells, filter, and top-k all differentially verified",
 )
 def s14_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import reduce
-
-    from pyspark.sql import Window
-
     from dww_data_pipeline_spark.plans.pipeline_ext2 import (
-        _IVF_K,
-        _IVF_NPROBE,
-        _PQ_QUERIES,
-        _PQ_TOPK,
         _PQ_VQ_SPARK,
+        _coarse_probe_panel,
+        _ivf_probe_topk,
         _ivfpq_coarse_expr,
+        _query_rows,
         _train_coarse,
     )
 
@@ -1398,41 +1393,8 @@ def s14_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vq",
             F.expr(_ivfpq_coarse_expr(ccents)).alias("cluster"),
         ).filter(F.col("label") % 2 == 1)
-        qrows = {
-            int(r["vec_id"]): list(r["vq"])
-            for r in vq.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-        }
-        per_q = []
-        for qid in _PQ_QUERIES:
-            qvec = qrows[qid]
-            probe = sorted(
-                range(_IVF_K),
-                key=lambda j: (
-                    sum((qvec[i] - ccents[j][i]) ** 2 for i in range(64)),
-                    j,
-                ),
-            )[:_IVF_NPROBE]
-            qlit = "array(" + ", ".join(f"{int(x)}L" for x in qvec) + ")"
-            d2 = F.expr(
-                f"aggregate(zip_with(vq, {qlit}, (x, y) -> (x - y) * (x - y)), "
-                "0L, (acc, v) -> acc + v)"
-            )
-            per_q.append(
-                assigned.filter(
-                    F.col("cluster").isin([int(j) for j in probe])
-                ).select(
-                    F.lit(qid).cast("long").alias("query_id"),
-                    "vec_id",
-                    d2.alias("d2"),
-                )
-            )
-        u = reduce(lambda a, b: a.unionByName(b), per_q)
-        w = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-        return (
-            u.select(
-                "query_id", "vec_id", "d2", F.row_number().over(w).alias("rank")
-            )
-            .filter(F.col("rank") <= _PQ_TOPK)
+        return _ivf_probe_topk(
+            assigned, _coarse_probe_panel(_query_rows(vq), ccents)
         )
     finally:
         vq.unpersist(blocking=False)

@@ -250,6 +250,7 @@ def coarse_index_lifecycle_tick(
         _coarse_probe_panel,
         _coarse_rank,
         _ivfpq_coarse_expr,
+        _query_rows,
     )
     from dww_data_pipeline_spark.plans.selection_plans import (
         index_staleness_gate,
@@ -273,10 +274,7 @@ def coarse_index_lifecycle_tick(
         )
     else:
         # frozen probe panel: 3 x 64 integer collect (e7 discipline)
-        qrows = {
-            int(r["vec_id"]): list(r["vq"])
-            for r in q.filter(F.col("vec_id").isin(*_PQ_QUERIES)).collect()
-        }
+        qrows = _query_rows(q)
         assigned = q.select(
             "vec_id",
             "step",

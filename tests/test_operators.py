@@ -189,59 +189,7 @@ class TestDensity:
         assert len(rep) == 3  # but still listed
 
 
-DOCS = [
-    (1, "the quick brown fox jumps over the lazy dog"),
-    (2, "the quick brown fox jumps over the lazy cat"),  # near-dup of 1
-    (3, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
-    (4, "completely different content about spark engines"),
-    (5, "tiny"),
-]
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(DOCS, ["doc_id", "text"])
-
-
 class TestDedup:
-    def test_exact_duplicates(self, docs):
-        out = dedup.exact_duplicates(docs, "doc_id", "text").collect()
-        assert len(out) == 1
-        assert out[0]["doc_ids"] == [1, 3]
-
-    def test_dedup_exact_keeps_min_id(self, docs):
-        out = dedup.dedup_exact(docs, "doc_id", "text")
-        ids = sorted(r["doc_id"] for r in out.collect())
-        assert ids == [1, 2, 4, 5]  # 3 dropped (dup of 1)
-
-    def test_minhash_identical_docs_same_signature(self, docs):
-        sigs = {
-            r["doc_id"]: tuple(r["sig"])
-            for r in dedup.minhash_signatures(docs, "doc_id", "text").collect()
-        }
-        assert sigs[1] == sigs[3]
-        assert sigs[1] != sigs[4]
-
-    def test_lsh_finds_exact_and_near_dups(self, docs):
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
-        }
-        assert (1, 3) in pairs  # exact dup always collides
-        assert (1, 4) not in pairs and (3, 4) not in pairs
-
-    def test_jaccard_verification(self, docs):
-        pairs = docs.sparkSession.createDataFrame(
-            [(1, 3), (1, 2), (1, 4)], ["id_a", "id_b"]
-        )
-        out = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dedup.jaccard_pairs(docs, pairs, "doc_id", "text").collect()
-        }
-        assert out[(1, 3)] == 1.0
-        assert 0.0 < out[(1, 2)] < 1.0
-        assert out[(1, 4)] == 0.0
-
     def test_connected_components(self, spark):
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (5, 6)], ["id_a", "id_b"]
@@ -251,15 +199,6 @@ class TestDedup:
             for r in dedup.connected_components(pairs).collect()
         }
         assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}  # chain collapses to min id
-
-    def test_simhash_near_dups_close_in_hamming(self, docs):
-        sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "doc_id", "text").collect()}
-        df = docs.sparkSession.createDataFrame(
-            [(sh[1], sh[3]), (sh[1], sh[2]), (sh[1], sh[4])], ["a", "b"]
-        ).select(dedup.hamming64(F.col("a"), F.col("b")).alias("d"))
-        d13, d12, d14 = [r["d"] for r in df.collect()]
-        assert d13 == 0  # identical docs
-        assert d12 < d14  # near-dup closer than unrelated
 
 
 class TestSimilarity:
@@ -271,28 +210,6 @@ class TestSimilarity:
         out = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=3)
         top1 = {r["query_id"]: r["vec_id"] for r in out.filter(F.col("rank") == 1).collect()}
         assert top1 == {0: 0, 1: 1, 2: 2}  # each vector is its own nearest
-
-    def test_lsh_topk_recall_vs_brute_force(self, spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        bf = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=5)
-        lsh = similarity.lsh_topk(
-            emb, queries, "vec_id", "embedding", k=5, bits=4, dim=64
-        )
-        bf_sets = {}
-        for r in bf.collect():
-            bf_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        lsh_sets = {}
-        for r in lsh.collect():
-            lsh_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        # every query finds itself, and bucket pruning yields a sane subset
-        recalls = [
-            len(bf_sets[q] & lsh_sets.get(q, set())) / 5 for q in bf_sets
-        ]
-        assert all(q in lsh_sets.get(q, set()) for q in bf_sets)
-        assert sum(recalls) / len(recalls) > 0.2  # 4-bit buckets, exact probe only
 
 
 class TestMultimodal:
@@ -347,118 +264,6 @@ class TestMultimodal:
         a = extract_media_features(media, dim=4).collect()[0]["feature"]
         b = extract_media_features(media, dim=4).collect()[0]["feature"]
         assert a == b
-
-
-class TestMultiProbeLsh:
-    def _recall(self, spark, sf_dir, n_probe):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        bf = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=5)
-        lsh = similarity.lsh_topk(
-            emb, queries, "vec_id", "embedding", k=5, bits=4, dim=64, n_probe=n_probe
-        )
-        bf_sets, lsh_sets = {}, {}
-        for r in bf.collect():
-            bf_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        for r in lsh.collect():
-            lsh_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return sum(
-            len(bf_sets[q] & lsh_sets.get(q, set())) / 5 for q in bf_sets
-        ) / len(bf_sets)
-
-    def test_multi_probe_monotone_recall(self, spark, sf_dir):
-        # probing more buckets can only add candidates → recall must be
-        # monotone, and margin-aware probes should lift it well past
-        # the single-probe floor on real embeddings
-        # candidate sets are strict supersets as n_probe grows and the
-        # true top-k dominates every non-member, so recall is provably
-        # monotone — assert that, plus an absolute floor
-        r1 = self._recall(spark, sf_dir, n_probe=1)
-        r3 = self._recall(spark, sf_dir, n_probe=3)
-        r5 = self._recall(spark, sf_dir, n_probe=5)
-        assert r3 >= r1 and r5 >= r3
-        assert r5 >= 0.45, f"recall curve {r1}/{r3}/{r5} too low"
-
-    def test_n_probe_validation(self, spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.limit(1).select(F.col("vec_id").alias("query_id"), "embedding")
-        with pytest.raises(ValueError):
-            similarity.lsh_topk(emb, q, "vec_id", "embedding", bits=4, n_probe=6)
-
-
-class TestBucketCap:
-    def test_max_bucket_size_drops_mega_buckets(self, spark):
-        # 20 identical docs share every band bucket (400-pair blowup);
-        # with a cap they emit nothing, while a distinct near-dup pair
-        # in small buckets survives
-        rows = [(i, "the same exact boilerplate text repeated here") for i in range(20)]
-        # a 2-doc bucket that must SURVIVE the cap
-        rows += [
-            (100, "a genuinely unique document about spark engines and scale"),
-            (101, "a genuinely unique document about spark engines and scale"),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        uncapped = dedup.minhash_lsh_pairs(df, "doc_id", "text")
-        capped = dedup.minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=10)
-        unc = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
-        cap = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-        assert (100, 101) in unc and (100, 101) in cap
-        assert any(a < 20 and b < 20 for a, b in unc)  # mega-bucket pairs present
-        assert not any(a < 20 and b < 20 for a, b in cap)  # ...and capped away
-
-
-class TestArrowBruteForce:
-    def test_arrow_variant_matches_expression_path(self, spark, sf_dir):
-        """Parity within float32-vs-float64 product precision: identical
-        member sets except where a cosine sits within 2e-6 of the k-th
-        threshold, and common members' cosines agree to 2e-6."""
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        expr = similarity.brute_force_topk(emb, queries, "vec_id", "embedding", k=5)
-        arrow = similarity.brute_force_topk_arrow(
-            emb, queries, "vec_id", "embedding", k=5
-        )
-        by_q_e, by_q_a = {}, {}
-        for r in expr.collect():
-            by_q_e.setdefault(r["query_id"], {})[r["vec_id"]] = r["cos"]
-        for r in arrow.collect():
-            by_q_a.setdefault(r["query_id"], {})[r["vec_id"]] = r["cos"]
-        assert set(by_q_e) == set(by_q_a)
-        for q in by_q_e:
-            e, a = by_q_e[q], by_q_a[q]
-            for vid in set(e) & set(a):
-                assert abs(e[vid] - a[vid]) <= 2e-6, (q, vid)
-            # any disagreeing member must be a boundary case: its score
-            # within 2e-6 of the k-th (minimum kept) score
-            thr = min(e.values())
-            for vid in set(e) ^ set(a):
-                score = e.get(vid, a.get(vid))
-                assert abs(score - thr) <= 2e-6, (q, vid, score, thr)
-
-    def test_arrow_degenerate_inputs(self, spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        empty_q = emb.filter(F.col("vec_id") < 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding")
-        )
-        out = similarity.brute_force_topk_arrow(
-            emb, empty_q, "vec_id", "embedding", k=5
-        )
-        assert out.count() == 0
-        # null query vector scores 0.0 everywhere (expression-path
-        # zero-norm semantics) instead of crashing
-        null_q = spark.createDataFrame(
-            [(99, None)], "query_id long, embedding array<float>"
-        )
-        out2 = similarity.brute_force_topk_arrow(
-            emb, null_q, "vec_id", "embedding", k=3
-        )
-        rows = out2.collect()
-        assert len(rows) == 3
-        assert all(r["cos"] == 0.0 for r in rows)
 
 
 class TestVideoFrameDedup:

@@ -179,3 +179,172 @@ def test_no_dangling_tool_citations():
             if not pinned and not os.path.exists(os.path.join(REPO, "tools", name)):
                 dangling.append(f"{os.path.relpath(path, REPO)}: tools/{name}")
     assert not dangling, f"citations of missing tools: {sorted(set(dangling))}"
+
+
+_PKG = "dww_data_pipeline_spark"
+_ENGINE_ROOTS = ("functions", "operators", "plans", "sources", "streaming")
+
+
+def _python_blocks(path: str) -> list[str]:
+    import re
+
+    with open(path, encoding="utf-8") as f:
+        return re.findall(r"```python\n(.*?)```", f.read(), re.S)
+
+
+def _snippet_names(tree) -> dict:
+    """Local name → engine module or object for each ``from
+    dww_data_pipeline_spark… import …`` in a snippet."""
+    import ast
+    import importlib
+
+    names = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == _PKG:
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                try:
+                    obj = importlib.import_module(f"{node.module}.{a.name}")
+                except ImportError:
+                    obj = getattr(mod, a.name)
+                names[a.asname or a.name] = obj
+    return names
+
+
+def _resolve_engine_call(func, names):
+    """The engine object a call's function expression names (``P.f``,
+    ``read_csv_dim``, ``operators.documents.kml_tracks``), or None when
+    its root is not an engine name (a local variable's method).
+    Raises AttributeError when the engine has no such name."""
+    import ast
+    import importlib
+    import inspect
+
+    parts = []
+    node = func
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    root, rest = node.id, parts[::-1]
+    if root in names:
+        obj = names[root]
+    elif root in _ENGINE_ROOTS:
+        obj = importlib.import_module(f"{_PKG}.{root}")
+    else:
+        return None
+    for attr in rest:
+        if inspect.ismodule(obj) and not hasattr(obj, attr):
+            try:
+                importlib.import_module(f"{obj.__name__}.{attr}")
+            except ImportError:
+                pass
+        obj = getattr(obj, attr)
+    return obj
+
+
+def test_migration_snippets_bind():
+    """Every engine call in MIGRATION.md's python snippets names a
+    function that exists and accepts the arguments the snippet passes
+    (``inspect.signature(fn).bind``; a lone ``...`` argument marks the
+    arguments as elided, so only the name is checked).  No Spark
+    session starts."""
+    import ast
+    import inspect
+
+    sys.path.insert(0, REPO)
+    blocks = _python_blocks(os.path.join(REPO, "MIGRATION.md"))
+    assert blocks
+    bad, checked = [], 0
+    names = {}  # later snippets reuse earlier imports (``P`` in §2)
+    for block in blocks:
+        tree = ast.parse(block)
+        names.update(_snippet_names(tree))
+        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+            where = ast.unparse(call.func)
+            try:
+                fn = _resolve_engine_call(call.func, names)
+            except AttributeError as e:
+                bad.append(f"{where}: {e}")
+                continue
+            if fn is None:
+                continue
+            checked += 1
+            args, kws = call.args, call.keywords
+            if (
+                len(args) == 1
+                and not kws
+                and isinstance(args[0], ast.Constant)
+                and args[0].value is Ellipsis
+            ):
+                continue
+            try:
+                inspect.signature(fn).bind(
+                    *[None] * len(args), **{k.arg: None for k in kws}
+                )
+            except TypeError as e:
+                bad.append(f"{where}: {e}")
+    assert checked, "no engine calls found in MIGRATION.md snippets"
+    assert not bad, f"MIGRATION.md snippets that cannot run: {bad}"
+
+
+def _engine_modules() -> dict[str, str]:
+    """Dotted path below the package (``operators.dedup``) → importable
+    module name, for every engine module file."""
+    import glob
+
+    root = os.path.join(REPO, _PKG)
+    out = {}
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)[: -len(".py")].replace(os.sep, ".")
+        if not rel.endswith("__init__"):
+            out[rel] = f"{_PKG}.{rel}"
+    return out
+
+
+def _coverage_section2(text: str) -> str:
+    """COVERAGE.md's table rows from the survey-inventory sections
+    (everything before the TPC-H shapes section)."""
+    head = text.split("\n## TPC-H decision-support shapes", 1)[0]
+    return "\n".join(line for line in head.splitlines() if line.startswith("|"))
+
+
+def test_docs_cite_existing_engine_names():
+    """Every backticked ``module.func`` citation in MIGRATION.md and in
+    COVERAGE.md's §2 tables names something the engine module still
+    has.  ``module`` is a dotted (or slashed) path below the package or
+    a unique module basename; backticked file names and non-engine
+    prefixes are not citations.  Imports only; no Spark session."""
+    import importlib
+    import re
+
+    sys.path.insert(0, REPO)
+    modules = _engine_modules()
+    by_base: dict[str, list[str]] = {}
+    for rel in modules:
+        by_base.setdefault(rel.rsplit(".", 1)[-1], []).append(rel)
+    with open(os.path.join(REPO, "MIGRATION.md"), encoding="utf-8") as f:
+        migration = f.read()
+    with open(os.path.join(REPO, "COVERAGE.md"), encoding="utf-8") as f:
+        coverage = _coverage_section2(f.read())
+    cite = re.compile(r"`([A-Za-z_][\w/.]*)\.([A-Za-z_]\w*)`")
+    file_exts = {"py", "md", "json", "js", "sh", "csv", "txt", "parquet"}
+    missing, checked = [], 0
+    for doc, text in (("MIGRATION.md", migration), ("COVERAGE.md", coverage)):
+        for m in cite.finditer(text):
+            path, name = m.group(1).replace("/", "."), m.group(2)
+            path = path.removeprefix(f"{_PKG}.")
+            if name in file_exts:
+                continue
+            if path in modules:
+                rel = path
+            elif len(by_base.get(path, [])) == 1:
+                rel = by_base[path][0]
+            else:
+                continue
+            checked += 1
+            if not hasattr(importlib.import_module(modules[rel]), name):
+                missing.append(f"{doc}: {m.group(0)}")
+    assert checked, "no engine citations found"
+    assert not missing, f"docs cite engine names that do not exist: {missing}"

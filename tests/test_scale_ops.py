@@ -64,31 +64,6 @@ class TestStreamingJumps:
 
 
 class TestSkew:
-    def test_salted_count_matches_plain(self, spark, sf_dir):
-        li = load_table(spark, sf_dir, "lineitem")
-        plain = {
-            r["l_returnflag"]: r["cnt"]
-            for r in li.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
-        salted = {
-            r["l_returnflag"]: r["cnt"]
-            for r in skew.salted_count(li, ["l_returnflag"]).collect()
-        }
-        assert salted == plain
-
-    def test_salted_sum_matches_plain(self, spark, sf_dir):
-        li = load_table(spark, sf_dir, "lineitem")
-        val = F.col("l_quantity").cast("decimal(18,2)")
-        plain = {
-            r["l_returnflag"]: r["total"]
-            for r in li.groupBy("l_returnflag").agg(F.sum(val).alias("total")).collect()
-        }
-        salted = {
-            r["l_returnflag"]: r["total"]
-            for r in skew.salted_sum(li, ["l_returnflag"], val).collect()
-        }
-        assert salted == plain
-
     def test_salted_join_matches_plain(self, spark, sf_dir):
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
         o = load_table(spark, sf_dir, "orders").select(
@@ -201,68 +176,35 @@ class TestIvfMultiProbe:
             similarity.ivf_topk(emb, q, "vec_id", "embedding", n_lists=8, nprobe=9)
 
 
-class TestArrowBucketScorer:
-    def test_lsh_and_ivf_arrow_scorer_parity(self, spark, sf_dir):
-        """scorer='arrow' must rank the same candidates as the
-        expression path (cos within float32/float64 tolerance)."""
-        from pyspark.sql import functions as F
-
-        from dww_data_pipeline_spark.operators import similarity
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        cases = [
-            (similarity.lsh_topk, dict(bits=4, dim=64, n_probe=3)),
-            (similarity.ivf_topk, dict(n_lists=8, nprobe=2)),
-        ]
-        for fn, kw in cases:
-            e = sorted(
-                (r["query_id"], r["rank"], r["vec_id"], r["cos"])
-                for r in fn(
-                    emb, q, "vec_id", "embedding", k=5, scorer="expr", **kw
-                ).collect()
-            )
-            a = sorted(
-                (r["query_id"], r["rank"], r["vec_id"], r["cos"])
-                for r in fn(
-                    emb, q, "vec_id", "embedding", k=5, scorer="arrow", **kw
-                ).collect()
-            )
-            assert len(e) == len(a)
-            for x, y in zip(e, a):
-                assert x[:3] == y[:3], (fn.__name__, x, y)
-                assert abs(x[3] - y[3]) <= 2e-6, (fn.__name__, x, y)
-
-
 class TestPcaProjection:
     def test_components_orthonormal_and_sorted(self, spark, sf_dir):
         import numpy as np
 
-        from dww_data_pipeline_spark.operators.similarity import pca_components
+        from dww_data_pipeline_spark.operators.similarity import pca_quality
         from dww_data_pipeline_spark.sources.catalog import load_table
 
         e = load_table(spark, str(sf_dir), "embeddings")
-        comps, vals = pca_components(e, "embedding", k=8, dim=64)
+        q = pca_quality(e, "embedding", k=8, dim=64)
+        comps, vals = q["components"], q["eigenvalues"]
         m = np.array(comps)
         assert np.allclose(m @ m.T, np.eye(8), atol=1e-8)
         assert vals == sorted(vals, reverse=True)
         # deterministic: a second run reproduces the components exactly
-        comps2, vals2 = pca_components(e, "embedding", k=8, dim=64)
+        q2 = pca_quality(e, "embedding", k=8, dim=64)
+        comps2, vals2 = q2["components"], q2["eigenvalues"]
         assert comps == comps2 and vals == vals2
 
     def test_projection_variance_descends(self, spark, sf_dir):
         import numpy as np
 
         from dww_data_pipeline_spark.operators.similarity import (
-            pca_components,
             pca_project,
+            pca_quality,
         )
         from dww_data_pipeline_spark.sources.catalog import load_table
 
         e = load_table(spark, str(sf_dir), "embeddings")
-        comps, _ = pca_components(e, "embedding", k=4, dim=64)
+        comps = pca_quality(e, "embedding", k=4, dim=64)["components"]
         rows = pca_project(e, comps, "embedding").select("pc0", "pc1", "pc2", "pc3").collect()
         arr = np.array([[r[f"pc{i}"] for i in range(4)] for r in rows])
         second_moments = (arr * arr).mean(axis=0)
