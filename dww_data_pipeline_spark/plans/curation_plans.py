@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.plans.text_exprs import SQL_TOKS as _SQL_TOKS_CURATION
-from dww_data_pipeline_spark.sources.catalog import load_table
+from dww_data_pipeline_spark.sources.catalog import cached_artifact, load_table
 
 # ---------------------------------------------------------------------------
 # d14 — chunk-level exact dedup.
@@ -1099,44 +1099,42 @@ def _pr_oracle() -> str:
     return "\n".join(parts)
 
 
-_EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def supplier_transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier→supplier transition counts along each customer's
     purchase timeline (the shared edge builder for pr1/pr2/pr3);
     returns (src, dst, w) with w the BIGINT transition count. The
     node-bounded edge list is localCheckpoint-materialized once per
-    (application, sf_dir) — the pr-family consumers share it, same
-    materialized-view rule as strong_tie_graph / lsh_pairs_cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_MEMO.get(key)
-    if cached is not None:
-        return cached
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    # l_linenumber is NOT unique within an order in the synthetic data:
-    # the supplier key completes the total order (SURVEY §7.3
-    # order-dependency hazard — every window must sort on a total key)
-    w = Window.partitionBy("o_custkey").orderBy(
-        "o_orderdate", "o_orderkey", "l_linenumber", "l_suppkey"
-    )
-    timeline = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "o_custkey", "o_orderdate", "o_orderkey", "l_linenumber", "l_suppkey"
-    )
-    edges = (
-        timeline.withColumn("prev", F.lag("l_suppkey").over(w))
-        .filter(F.col("prev").isNotNull() & (F.col("prev") != F.col("l_suppkey")))
-        .groupBy(F.col("prev").alias("src"), F.col("l_suppkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint()
-    )
-    _EDGE_MEMO[key] = edges
-    return edges
+    ``catalog.cached_artifact`` token — the pr-family consumers share
+    it, same materialized-view rule as strong_tie_graph /
+    lsh_pairs_cached."""
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_linenumber", "l_suppkey"
+        )
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderdate"
+        )
+        # l_linenumber is NOT unique within an order in the synthetic
+        # data: the supplier key completes the total order (SURVEY §7.3
+        # order-dependency hazard — every window must sort on a total key)
+        w = Window.partitionBy("o_custkey").orderBy(
+            "o_orderdate", "o_orderkey", "l_linenumber", "l_suppkey"
+        )
+        timeline = li.join(o, li.l_orderkey == o.o_orderkey).select(
+            "o_custkey", "o_orderdate", "o_orderkey", "l_linenumber", "l_suppkey"
+        )
+        return (
+            timeline.withColumn("prev", F.lag("l_suppkey").over(w))
+            .filter(
+                F.col("prev").isNotNull() & (F.col("prev") != F.col("l_suppkey"))
+            )
+            .groupBy(F.col("prev").alias("src"), F.col("l_suppkey").alias("dst"))
+            .agg(F.count(F.lit(1)).alias("w"))
+            .localCheckpoint()
+        )
+
+    return cached_artifact(spark, sf_dir, "supplier_transition_edges", build)
 
 
 @register(

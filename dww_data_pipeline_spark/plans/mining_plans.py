@@ -33,6 +33,7 @@ from dww_data_pipeline_spark.plans.pipeline_ext2 import (
 )
 from dww_data_pipeline_spark.plans.registry import REGISTRY, register
 from dww_data_pipeline_spark.plans.text_exprs import SQL_TOKS, spark_tokens, sql_kgrams
+from dww_data_pipeline_spark.session import persisted
 from dww_data_pipeline_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -165,8 +166,7 @@ def _km_assign_expr(cents: list[list[int]]) -> str:
 def e7_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     vq = e.select("vec_id", F.expr(_VQ_SQL_SPARK).alias("vq"))
-    vq = vq.persist()
-    try:
+    with persisted(vq):
         # init: the k lowest vec_ids (TakeOrdered — bounded, no full sort)
         init = vq.orderBy("vec_id").limit(_KM_K).collect()
         cents = [list(r["vq"]) for r in init]
@@ -191,8 +191,6 @@ def e7_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             st["j"].cast("int").alias("cluster"),
             st["d"].alias("d2"),
         )
-    finally:
-        vq.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------
@@ -1194,9 +1192,10 @@ def t25_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "driver-collect cap and with encode_words above it (none here — the "
     "store is trained on this corpus — but both paths are live and "
     "pytest-pinned on novel words). The store is built at most once "
-    "per (application, sf_dir) — the session memo stands in for the "
-    "lake's pre-existing artifact, so every call after the first is "
-    "pure load + apply with ZERO training work, exactly the "
+    "per (application, table fingerprint) — the session artifact cache "
+    "stands in for the lake's pre-existing artifact, so every call "
+    "after the first is pure load + apply with ZERO training work, "
+    "exactly the "
     "production ratio. Same oracle as t25: identical output, served "
     "from the artifact",
 )

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.plans.text_exprs import SQL_TOKS, spark_tokens
-from dww_data_pipeline_spark.sources.catalog import load_table
+from dww_data_pipeline_spark.sources.catalog import cached_artifact, load_table
 
 # ---------------------------------------------------------------------------
 # ext_bloom_prune_join — runtime-filter join pruning.
@@ -433,53 +433,45 @@ _STRONG_GRAPH_SQL = f"""inst AS (
     )"""
 
 
-# session-scoped memo of the checkpointed edge list: pr4/pr5/pr6 all
-# consume the SAME graph, and re-deriving it costs a fact-table
-# self-join each time — caching the materialized handle is the
-# materialized-view semantics a shared intermediate deserves. Keyed
-# by (application, sf_dir) so a new SparkSession never sees a stale
-# handle; the cached object is a localCheckpoint-ed node-bounded
-# edge list (a few thousand rows).
-_GRAPH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def strong_tie_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(pairs, deg, oriented) of the strong-tie co-supplier graph.
 
-    The edge list is localCheckpoint-materialized (node-dimension-
-    bounded — tiny next to the fact table) so every consumer of the
-    returned frames reads materialized edges instead of re-running
-    the lineitem self-join per reference; the materialized handle is
-    memoized per (application, sf_dir)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GRAPH_MEMO.get(memo_key)
-    if cached is not None:
-        return _graph_from_pairs(cached)
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
+    pr4/pr5/pr6 all consume the SAME graph, and re-deriving it costs a
+    fact-table self-join each time.  The edge list is
+    localCheckpoint-materialized (node-dimension-bounded — tiny next
+    to the fact table) so every consumer of the returned frames reads
+    materialized edges instead of re-running the lineitem self-join
+    per reference; the materialized handle is cached per
+    ``catalog.cached_artifact`` token."""
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+        a = li.alias("a")
+        b = li.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
+            )
+            .select(
+                "a.l_orderkey",
+                F.col("a.l_suppkey").alias("u"),
+                F.col("b.l_suppkey").alias("v"),
+            )
+            .distinct()
+            .groupBy("u", "v")
+            .agg(F.count(F.lit(1)).alias("co"))
+            .filter(F.col("co") >= _TRI_MIN_CO)
+            .select("u", "v")
+            .localCheckpoint()
         )
-        .select(
-            "a.l_orderkey",
-            F.col("a.l_suppkey").alias("u"),
-            F.col("b.l_suppkey").alias("v"),
-        )
-        .distinct()
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("co"))
-        .filter(F.col("co") >= _TRI_MIN_CO)
-        .select("u", "v")
-        .localCheckpoint()
+
+    return _graph_from_pairs(
+        cached_artifact(spark, sf_dir, "strong_tie_pairs", build)
     )
-    _GRAPH_MEMO[memo_key] = pairs
-    return _graph_from_pairs(pairs)
 
 
 def _graph_from_pairs(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df
+from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df, persisted
 
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.plans.text_exprs import SQL_TOKS, spark_tokens
@@ -548,8 +548,8 @@ def s10_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq")).persist()
-    try:
+    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq"))
+    with persisted(vq):
         init = vq.orderBy("vec_id").limit(_PQ_K).collect()
         books = [
             [list(r["vq"])[m * _PQ_SUB : (m + 1) * _PQ_SUB] for r in init]
@@ -629,8 +629,6 @@ def s10_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rank") <= _PQ_TOPK)
             .select("query_id", "vec_id", "approx_d2", "rank")
         )
-    finally:
-        vq.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------
@@ -1809,8 +1807,8 @@ def s11_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq")).persist()
-    try:
+    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq"))
+    with persisted(vq):
         # ---- coarse quantizer: k=4, one exact-integer Lloyd iteration
         ccents = _train_coarse(vq)
 
@@ -1839,100 +1837,98 @@ def s11_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"transform(vq, (x, i) -> x - element_at("
                 f"element_at({cents_lit}, cluster + 1), i + 1) + 4000000L)"
             ).alias("rv"),
-        ).persist()
-
-        # ---- PQ on residuals: init from the 16 lowest vec_ids
-        pinit = res.orderBy("vec_id").limit(_PQ_K).collect()
-        books = [
-            [list(r["rv"])[m * _PQ_SUB : (m + 1) * _PQ_SUB] for r in pinit]
-            for m in range(_PQ_M)
-        ]
-        passigned = res.select(
-            "rv",
-            *[
-                F.expr(_pq_code_expr_rv(books[m], m * _PQ_SUB)).alias(f"c{m}")
+        )
+        with persisted(res):
+            # ---- PQ on residuals: init from the 16 lowest vec_ids
+            pinit = res.orderBy("vec_id").limit(_PQ_K).collect()
+            books = [
+                [list(r["rv"])[m * _PQ_SUB : (m + 1) * _PQ_SUB] for r in pinit]
                 for m in range(_PQ_M)
-            ],
-        )
-        psums = (
-            passigned.select(
-                F.posexplode("rv").alias("pos", "val"),
-                *[F.col(f"c{m}") for m in range(_PQ_M)],
+            ]
+            passigned = res.select(
+                "rv",
+                *[
+                    F.expr(_pq_code_expr_rv(books[m], m * _PQ_SUB)).alias(f"c{m}")
+                    for m in range(_PQ_M)
+                ],
             )
-            .withColumn("m", (F.col("pos") / _PQ_SUB).cast("int"))
-            .withColumn(
-                "code",
-                F.element_at(
-                    F.array(*[F.col(f"c{m}") for m in range(_PQ_M)]),
-                    F.col("m") + 1,
-                ),
-            )
-            .groupBy("m", "code", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        for r in psums:
-            s, n = int(r["s"]), int(r["n"])
-            books[r["m"]][r["code"]][r["pos"] - r["m"] * _PQ_SUB] = (
-                2 * s + n
-            ) // (2 * n)
-
-        # ---- final codes for every vector
-        final = res.select(
-            "vec_id",
-            "cluster",
-            *[
-                F.expr(_pq_code_expr_rv(books[m], m * _PQ_SUB)).alias(f"c{m}")
-                for m in range(_PQ_M)
-            ],
-        )
-
-        # ---- queries: probe nprobe coarse cells, ADC over residuals
-        # ONE pass over the encoded corpus: per query, a CASE over its
-        # probed cells selects the matching lookup-table sum (NULL =
-        # row not in this query's probe set), stacked via explode —
-        # no per-(query, cell) branch unions re-running the encode scan
-        per_query = []
-        for qid, qv, probed in _coarse_probe_panel(_query_rows(vq), ccents):
-            dist = F.lit(None).cast("long")
-            for cl in probed:
-                qr = [qv[i] - ccents[cl][i] + 4_000_000 for i in range(64)]
-                d_cl = None
-                for m in range(_PQ_M):
-                    table = [
-                        sum(
-                            (qr[m * _PQ_SUB + i] - cw[i]) ** 2
-                            for i in range(_PQ_SUB)
-                        )
-                        for cw in books[m]
-                    ]
-                    term = F.element_at(
-                        F.array(*[F.lit(int(d)) for d in table]),
-                        F.col(f"c{m}") + 1,
-                    )
-                    d_cl = term if d_cl is None else d_cl + term
-                dist = F.when(F.col("cluster") == cl, d_cl).otherwise(dist)
-            per_query.append(
-                F.struct(
-                    F.lit(qid).cast("long").alias("query_id"),
-                    dist.cast("long").alias("approx_d2"),
+            psums = (
+                passigned.select(
+                    F.posexplode("rv").alias("pos", "val"),
+                    *[F.col(f"c{m}") for m in range(_PQ_M)],
                 )
+                .withColumn("m", (F.col("pos") / _PQ_SUB).cast("int"))
+                .withColumn(
+                    "code",
+                    F.element_at(
+                        F.array(*[F.col(f"c{m}") for m in range(_PQ_M)]),
+                        F.col("m") + 1,
+                    ),
+                )
+                .groupBy("m", "code", "pos")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+                .collect()
             )
-        stacked = (
-            final.select(
-                "vec_id", F.explode(F.array(*per_query)).alias("s")
+            for r in psums:
+                s, n = int(r["s"]), int(r["n"])
+                books[r["m"]][r["code"]][r["pos"] - r["m"] * _PQ_SUB] = (
+                    2 * s + n
+                ) // (2 * n)
+
+            # ---- final codes for every vector
+            final = res.select(
+                "vec_id",
+                "cluster",
+                *[
+                    F.expr(_pq_code_expr_rv(books[m], m * _PQ_SUB)).alias(f"c{m}")
+                    for m in range(_PQ_M)
+                ],
             )
-            .select("s.query_id", "vec_id", "s.approx_d2")
-            .filter(F.col("approx_d2").isNotNull())
-        )
-        w = Window.partitionBy("query_id").orderBy("approx_d2", "vec_id")
-        return (
-            stacked.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= _PQ_TOPK)
-            .select("query_id", "vec_id", "approx_d2", "rank")
-        )
-    finally:
-        vq.unpersist(blocking=False)
+
+            # ---- queries: probe nprobe coarse cells, ADC over residuals
+            # ONE pass over the encoded corpus: per query, a CASE over its
+            # probed cells selects the matching lookup-table sum (NULL =
+            # row not in this query's probe set), stacked via explode —
+            # no per-(query, cell) branch unions re-running the encode scan
+            per_query = []
+            for qid, qv, probed in _coarse_probe_panel(_query_rows(vq), ccents):
+                dist = F.lit(None).cast("long")
+                for cl in probed:
+                    qr = [qv[i] - ccents[cl][i] + 4_000_000 for i in range(64)]
+                    d_cl = None
+                    for m in range(_PQ_M):
+                        table = [
+                            sum(
+                                (qr[m * _PQ_SUB + i] - cw[i]) ** 2
+                                for i in range(_PQ_SUB)
+                            )
+                            for cw in books[m]
+                        ]
+                        term = F.element_at(
+                            F.array(*[F.lit(int(d)) for d in table]),
+                            F.col(f"c{m}") + 1,
+                        )
+                        d_cl = term if d_cl is None else d_cl + term
+                    dist = F.when(F.col("cluster") == cl, d_cl).otherwise(dist)
+                per_query.append(
+                    F.struct(
+                        F.lit(qid).cast("long").alias("query_id"),
+                        dist.cast("long").alias("approx_d2"),
+                    )
+                )
+            stacked = (
+                final.select(
+                    "vec_id", F.explode(F.array(*per_query)).alias("s")
+                )
+                .select("s.query_id", "vec_id", "s.approx_d2")
+                .filter(F.col("approx_d2").isNotNull())
+            )
+            w = Window.partitionBy("query_id").orderBy("approx_d2", "vec_id")
+            return (
+                stacked.withColumn("rank", F.row_number().over(w).cast("long"))
+                .filter(F.col("rank") <= _PQ_TOPK)
+                .select("query_id", "vec_id", "approx_d2", "rank")
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -3541,8 +3537,9 @@ def t35_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "straight from the persisted segmentation (exactness inherited "
     "from the t36 parity gate) — no training loop, no encode folds, "
     "one TakeOrdered on the KB-scale artifact. The store is built at "
-    "most once per (application, sf_dir) — the session memo stands "
-    "in for the lake's pre-existing artifact (the t25b discipline). "
+    "most once per (application, table fingerprint) — the session "
+    "artifact cache stands in for the lake's pre-existing artifact "
+    "(the t25b discipline). "
     "Same oracle as t35: identical output, served from the artifact",
 )
 def t35b_encode_top_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3696,9 +3693,8 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         vocab = (
             d.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
             .distinct()
-            .persist()
         )
-        try:
+        with persisted(vocab):
             got = collect_under_cap(vocab)
             if got is not None:
                 re_hash = sum(
@@ -3708,8 +3704,6 @@ def t36_tokenizer_artifact_parity(spark: SparkSession, sf_dir: str) -> DataFrame
             else:
                 reenc = ts.encode_words(vocab, merges)
                 re_hash = reenc.agg(F.sum(h_seg).alias("h")).collect()[0]["h"]
-        finally:
-            vocab.unpersist(blocking=False)
     finally:
         shutil.rmtree(store, ignore_errors=True)
     rows = [
@@ -3829,9 +3823,8 @@ def tokenizer_staleness_gate(
                 F.col("n_docs").alias("n"),
             )
         )
-        .persist()
     )
-    try:
+    with persisted(arrivals):
         seg_rows = collect_under_cap(seg)
         arr_rows = None if seg_rows is None else collect_under_cap(arrivals)
         if arr_rows is not None:
@@ -3850,8 +3843,6 @@ def tokenizer_staleness_gate(
         ).selectExpr(*_GATE_DECISION_SQL)
         # bounded: one row per grid step, collected while inputs are cached
         return local_rows_df(spark, out.collect(), out.schema)
-    finally:
-        arrivals.unpersist(blocking=False)
 
 
 def _gate_sums_driver(
@@ -4470,15 +4461,15 @@ def bpe_train_segmentation_df(
     histogram is persisted before the probe and released on both
     paths, so above the cap the loop starts from the probe's
     histogram instead of shuffling the corpus a second time."""
+    from dww_data_pipeline_spark.session import bounded_loop_shuffle
+
     hist = (
         d.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()  # the probe's histogram is the loop's input above the cap
     )
-    from dww_data_pipeline_spark.session import bounded_loop_shuffle
-
-    try:
+    # the probe's histogram is the loop's input above the cap
+    with persisted(hist):
         got = collect_under_cap(hist)
         if got is not None:
             merges, seg_rows = _bpe_train_driver(
@@ -4562,8 +4553,6 @@ def bpe_train_segmentation_df(
                     .alias("seg"),
                 ).localCheckpoint(eager=False)
         return merges, seg
-    finally:
-        hist.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------
@@ -4916,69 +4905,64 @@ def s15_ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq")).persist()
-    try:
+    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq"))
+    with persisted(vq):
         ccents = _train_coarse(vq)
         assigned = vq.select(
             "vec_id", "vq", F.expr(_ivfpq_coarse_expr(ccents)).alias("cluster")
-        ).persist()
-        qrows = _query_rows(vq)
-        branches = []
-        truth = []
-        for qid in _PQ_QUERIES:
-            ranked_cells = _coarse_rank(qrows[qid], ccents)
-            d2 = _exact_d2_col(qrows[qid])
-            truth.append(
-                vq.select(
-                    F.lit(qid).cast("long").alias("query_id"),
-                    "vec_id",
-                    d2.alias("d2"),
-                )
-            )
-            for p in range(1, _IVF_K + 1):
-                branches.append(
-                    assigned.filter(F.col("cluster").isin(ranked_cells[:p])).select(
-                        F.lit(p).cast("long").alias("nprobe"),
+        )
+        with persisted(assigned):
+            qrows = _query_rows(vq)
+            branches = []
+            truth = []
+            for qid in _PQ_QUERIES:
+                ranked_cells = _coarse_rank(qrows[qid], ccents)
+                d2 = _exact_d2_col(qrows[qid])
+                truth.append(
+                    vq.select(
                         F.lit(qid).cast("long").alias("query_id"),
                         "vec_id",
                         d2.alias("d2"),
                     )
                 )
-        wa = Window.partitionBy("nprobe", "query_id").orderBy("d2", "vec_id")
-        atop = (
-            reduce(lambda a, b: a.unionByName(b), branches)
-            .withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") <= _PQ_TOPK)
-            .select("nprobe", "query_id", "vec_id")
-        )
-        wt = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-        ex = (
-            reduce(lambda a, b: a.unionByName(b), truth)
-            .withColumn("rn", F.row_number().over(wt))
-            .filter(F.col("rn") <= _PQ_TOPK)
-            .select("query_id", "vec_id")
-        )
-        # LEFT join (not left_semi) so a (nprobe, query_id) whose probed
-        # candidates contain zero true-top-k hits still emits a row with
-        # hits_at_k=0, mirroring the oracle's LEFT JOIN + COUNT shape.
-        # Today 0-hit pairs are unreachable (every query vector is a
-        # corpus member, its own nearest cell ranks first, so p>=1
-        # always retrieves the query itself, which is in its own exact
-        # top-k) — but the parity must not depend on that invariant.
-        return (
-            atop.join(
-                ex.withColumn("hit", F.lit(1)), ["query_id", "vec_id"], "left"
+                for p in range(1, _IVF_K + 1):
+                    branches.append(
+                        assigned.filter(F.col("cluster").isin(ranked_cells[:p])).select(
+                            F.lit(p).cast("long").alias("nprobe"),
+                            F.lit(qid).cast("long").alias("query_id"),
+                            "vec_id",
+                            d2.alias("d2"),
+                        )
+                    )
+            wa = Window.partitionBy("nprobe", "query_id").orderBy("d2", "vec_id")
+            atop = (
+                reduce(lambda a, b: a.unionByName(b), branches)
+                .withColumn("rn", F.row_number().over(wa))
+                .filter(F.col("rn") <= _PQ_TOPK)
+                .select("nprobe", "query_id", "vec_id")
             )
-            .groupBy("nprobe", "query_id")
-            .agg(
-                F.coalesce(F.sum("hit"), F.lit(0))
-                .cast("long")
-                .alias("hits_at_k")
+            wt = Window.partitionBy("query_id").orderBy("d2", "vec_id")
+            ex = (
+                reduce(lambda a, b: a.unionByName(b), truth)
+                .withColumn("rn", F.row_number().over(wt))
+                .filter(F.col("rn") <= _PQ_TOPK)
+                .select("query_id", "vec_id")
             )
-        )
-    finally:
-        vq.unpersist(blocking=False)
-        try:
-            assigned.unpersist(blocking=False)
-        except NameError:
-            pass
+            # LEFT join (not left_semi) so a (nprobe, query_id) whose probed
+            # candidates contain zero true-top-k hits still emits a row with
+            # hits_at_k=0, mirroring the oracle's LEFT JOIN + COUNT shape.
+            # Today 0-hit pairs are unreachable (every query vector is a
+            # corpus member, its own nearest cell ranks first, so p>=1
+            # always retrieves the query itself, which is in its own exact
+            # top-k) — but the parity must not depend on that invariant.
+            return (
+                atop.join(
+                    ex.withColumn("hit", F.lit(1)), ["query_id", "vec_id"], "left"
+                )
+                .groupBy("nprobe", "query_id")
+                .agg(
+                    F.coalesce(F.sum("hit"), F.lit(0))
+                    .cast("long")
+                    .alias("hits_at_k")
+                )
+            )

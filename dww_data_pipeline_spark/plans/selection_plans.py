@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import local_rows_df
+from dww_data_pipeline_spark.session import local_rows_df, persisted
 
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.sources.catalog import load_table
@@ -1747,8 +1747,8 @@ def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN vec_id % 4 = 3 "
             "THEN CAST((vec_id % 16) div 4 AS INT) + 1 ELSE 0 END"
         ).alias("step"),
-    ).persist()
-    try:
+    )
+    with persisted(q):
         base = q.filter(F.col("step") == 0).select("vec_id", "vq")
         ccents = _train_coarse(base)  # frozen at base-build time
         assigned = q.select(
@@ -1774,8 +1774,6 @@ def s19_index_staleness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the gate is 5 rows; materialize before releasing the corpus
         # cache so the persist guard can unpersist deterministically
         return local_rows_df(spark, out.collect(), out.schema)
-    finally:
-        q.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------
@@ -1887,26 +1885,26 @@ def c8_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN vec_id % 4 = 3 "
             "THEN CAST((vec_id % 16) div 4 AS INT) + 1 ELSE 0 END"
         ).alias("step"),
-    ).persist()
-    store = tempfile.mkdtemp(prefix="dww_coarse_lc_")
-    try:
-        ai.build_coarse_store(
-            q.filter(F.col("step") == 0).select("vec_id", "vq"), store
-        )
-        pre_hash = ai.coarse_centroid_fingerprint(
-            ai.load_coarse_centroids(spark, store)
-        )
-        res = ai.coarse_index_lifecycle_tick(
-            spark, store, q, retrain_vq=q.select("vec_id", "vq"),
-            n_steps=_S19_STEPS,
-        )
-        post_hash = ai.coarse_centroid_fingerprint(
-            ai.load_coarse_centroids(spark, store)
-        )
-        final = max(res["gate"], key=lambda r: r["step"])
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-        q.unpersist(blocking=False)
+    )
+    with persisted(q):
+        store = tempfile.mkdtemp(prefix="dww_coarse_lc_")
+        try:
+            ai.build_coarse_store(
+                q.filter(F.col("step") == 0).select("vec_id", "vq"), store
+            )
+            pre_hash = ai.coarse_centroid_fingerprint(
+                ai.load_coarse_centroids(spark, store)
+            )
+            res = ai.coarse_index_lifecycle_tick(
+                spark, store, q, retrain_vq=q.select("vec_id", "vq"),
+                n_steps=_S19_STEPS,
+            )
+            post_hash = ai.coarse_centroid_fingerprint(
+                ai.load_coarse_centroids(spark, store)
+            )
+            final = max(res["gate"], key=lambda r: r["step"])
+        finally:
+            shutil.rmtree(store, ignore_errors=True)
     rows = [
         ("gate_drift_num", int(final["drift_num"])),
         ("gate_hits_at_k", int(final["hits_at_k"])),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dww_data_pipeline_spark.plans.registry import register
+from dww_data_pipeline_spark.session import persisted
 from dww_data_pipeline_spark.sources.catalog import load_table
 from dww_data_pipeline_spark.streaming.events import (
     session_window_agg,
@@ -26,6 +27,14 @@ from dww_data_pipeline_spark.streaming.events import (
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
+
+
+def _format_start(agg: DataFrame) -> DataFrame:
+    """A streaming window aggregate with its ``window_start`` rendered
+    as the oracles' 'yyyy-MM-dd HH:mm:ss' string."""
+    return agg.withColumn(
+        "window_start", F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
+    )
 
 
 @register(
@@ -42,21 +51,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "function runs as readStream + watermark in streaming/events.py",
 )
 def st1_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    out = (
-        ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return out
+    return _format_start(tumbling_window_agg(_events(spark, sf_dir)))
 
 
 @register(
@@ -77,16 +72,7 @@ def st1_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "event lands in exactly two windows; oracle materializes both starts",
 )
 def st2_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
+    return _format_start(sliding_window_agg(_events(spark, sf_dir)))
 
 
 @register(
@@ -288,8 +274,8 @@ def s2_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq")).persist()
-    try:
+    vq = e.select("vec_id", F.expr(_PQ_VQ_SPARK).alias("vq"))
+    with persisted(vq):
         ccents = _train_coarse(vq)
         assigned = vq.select(
             "vec_id", "vq", F.expr(_ivfpq_coarse_expr(ccents)).alias("cluster")
@@ -297,8 +283,6 @@ def s2_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _ivf_probe_topk(
             assigned, _coarse_probe_panel(_query_rows(vq), ccents)
         )
-    finally:
-        vq.unpersist(blocking=False)
 
 
 def _s2_attach_oracle() -> None:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import local_rows_df
+from dww_data_pipeline_spark.session import local_rows_df, persisted
 
 from dww_data_pipeline_spark.plans.registry import register
 from dww_data_pipeline_spark.sources.catalog import load_table
@@ -510,8 +510,8 @@ def s13_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
             for qid in _S13_QUERIES
         ],
     ).withColumn("rn", F.row_number().over(wq))
-    topf = fwd.filter(F.col("rn") <= _S13_K).persist()
-    try:
+    topf = fwd.filter(F.col("rn") <= _S13_K)
+    with persisted(topf):
         cand_vecs = {
             int(r["vec_id"]): list(r["vq"])
             for r in b.join(
@@ -558,8 +558,6 @@ def s13_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("rn").cast("long").alias("rank"),
             )
         )
-    finally:
-        topf.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------
@@ -1384,8 +1382,8 @@ def s14_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    vq = e.select("vec_id", "label", F.expr(_PQ_VQ_SPARK).alias("vq")).persist()
-    try:
+    vq = e.select("vec_id", "label", F.expr(_PQ_VQ_SPARK).alias("vq"))
+    with persisted(vq):
         ccents = _train_coarse(vq.select("vec_id", "vq"))
         assigned = vq.select(
             "vec_id",
@@ -1396,8 +1394,6 @@ def s14_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _ivf_probe_topk(
             assigned, _coarse_probe_panel(_query_rows(vq), ccents)
         )
-    finally:
-        vq.unpersist(blocking=False)
 
 
 _s14_attach_oracle()

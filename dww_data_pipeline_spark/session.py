@@ -202,3 +202,18 @@ def bounded_loop_shuffle(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", cur)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+@contextmanager
+def persisted(df: DataFrame):
+    """``df.persist()`` for the block's lifetime: the one owner of a
+    builder's cached frame.  The frame is released (non-blocking) when
+    the block exits, normally or by exception, so a plan returned from
+    inside the block must not need the cache after it — builders that
+    return a lazy plan over a persisted frame recompute it at
+    execution, and bounded results are collected first."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=False)

@@ -10,6 +10,9 @@ date/entity) — nothing here assumes local files.
 
 from __future__ import annotations
 
+import atexit
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,6 +69,66 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn(f.name, F.col(f.name).cast(T.TimestampType()))
     return df
+
+
+def _table_stats(sf_dir: str, name: str) -> tuple | None:
+    """(path, st_ino, st_size, st_mtime_ns) of one catalog table's
+    file, or of every file under a table directory; None when the
+    table is missing."""
+    path = f"{sf_dir}/{name}.parquet"
+    if not os.path.exists(path):
+        return None
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+    )
+    return tuple(
+        (os.path.relpath(f, sf_dir), st.st_ino, st.st_size, st.st_mtime_ns)
+        for f, st in ((f, os.stat(f)) for f in files)
+    )
+
+
+# One slot per (sf_dir, key): (token, value, release).
+_ARTIFACTS: dict[tuple, tuple] = {}
+
+
+def cached_artifact(spark: SparkSession, sf_dir: str, key, build, release=None):
+    """``build()``'s result for the slot ``(sf_dir, key)``, built at
+    most once while the slot's token is unchanged.
+
+    Shared intermediates (the LSH candidate pairs, kNN graphs, supplier
+    graphs, the trained tokenizer store) are read many times per
+    session and cost a full corpus pipeline to derive.  The token is
+    the Spark application id plus the stat fingerprint — (path, inode,
+    size, mtime_ns) — of every catalog table under ``sf_dir``, so a
+    new application or any table rewritten in place rebuilds the
+    value instead of serving a stale handle, and callers need not know
+    which tables their build reads.  A lookup costs ten ``os.stat``
+    calls and no Spark job.  A superseded value is dropped, after
+    ``release(value)`` when given; ``release`` also runs for every
+    live entry at interpreter exit."""
+    slot = (sf_dir, key)
+    token = (
+        spark.sparkContext.applicationId,
+        tuple(_table_stats(sf_dir, name) for name in TABLES),
+    )
+    entry = _ARTIFACTS.get(slot)
+    if entry is not None:
+        if entry[0] == token:
+            return entry[1]
+        del _ARTIFACTS[slot]
+        if entry[2] is not None:
+            entry[2](entry[1])
+    value = build()
+    _ARTIFACTS[slot] = (token, value, release)
+    return value
+
+
+@atexit.register
+def _release_artifacts() -> None:
+    for _, value, release in _ARTIFACTS.values():
+        if release is not None:
+            release(value)
+    _ARTIFACTS.clear()
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

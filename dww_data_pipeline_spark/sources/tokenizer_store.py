@@ -63,7 +63,6 @@ north-star LLM-pipeline infrastructure.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 import tempfile
@@ -71,7 +70,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df
+from dww_data_pipeline_spark.session import collect_under_cap, local_rows_df, persisted
 
 # The store's on-disk schemas, written by ``build_tokenizer_store`` and
 # pinned on every read (no parquet schema-inference job per load).
@@ -106,47 +105,36 @@ def build_tokenizer_store(
     return len(mrows)
 
 
-# Session-scoped persisted stores: in production the tokenizer
-# artifact PRE-EXISTS its consumers (trained by a scheduled job,
-# versioned in the lake); a standalone registered query has no lake,
-# so the memo is the stand-in — the FIRST t25b/t35b-style call per
-# (application, sf_dir) pays the one training run and every later
-# call is pure load + apply, exactly the production ratio.  Same
-# staleness contract as plans.dedup_plans._KNN_EDGE_MEMO: sf_dir is
-# assumed immutable for the application's life (true for the
-# read-only test fixtures); clear_store_memo() is the escape hatch.
-_STORE_MEMO: dict = {}
-
-
-def clear_store_memo() -> None:
-    """Delete memoized store directories and forget them."""
-    for path in _STORE_MEMO.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _STORE_MEMO.clear()
-
-
-atexit.register(clear_store_memo)
-
-
 def tokenizer_store_cached(
     spark: SparkSession, sf_dir: str, n_merges: int = 16
 ) -> str:
     """Path to a persisted tokenizer trained on ``sf_dir``'s documents
-    table, built at most once per (application, sf_dir, n_merges) into
-    a temp directory that lives until clear_store_memo()/interpreter
-    exit."""
-    from dww_data_pipeline_spark.sources.catalog import load_table
+    table, built at most once per ``catalog.cached_artifact`` token and
+    ``n_merges`` into a temp directory that is deleted when the token
+    changes or the interpreter exits.
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    cached = _STORE_MEMO.get(key)
-    if cached is not None:
-        return cached
-    store = tempfile.mkdtemp(prefix="dww_tokstore_")
-    build_tokenizer_store(
-        load_table(spark, sf_dir, "documents"), store, n_merges=n_merges
+    In production the tokenizer artifact PRE-EXISTS its consumers
+    (trained by a scheduled job, versioned in the lake); a standalone
+    registered query has no lake, so the cache is the stand-in — the
+    FIRST t25b/t35b-style call per token pays the one training run and
+    every later call is pure load + apply, exactly the production
+    ratio."""
+    from dww_data_pipeline_spark.sources.catalog import cached_artifact, load_table
+
+    def build() -> str:
+        store = tempfile.mkdtemp(prefix="dww_tokstore_")
+        build_tokenizer_store(
+            load_table(spark, sf_dir, "documents"), store, n_merges=n_merges
+        )
+        return store
+
+    return cached_artifact(
+        spark,
+        sf_dir,
+        ("tokenizer_store", n_merges),
+        build,
+        release=lambda path: shutil.rmtree(path, ignore_errors=True),
     )
-    _STORE_MEMO[key] = store
-    return store
 
 
 def load_merge_table(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -256,9 +244,8 @@ def fertility_from_store(
         docs.select(F.explode(spark_tokens(F.col("text"))).alias("tok"))
         .distinct()
         .join(nsym.select("tok"), "tok", "left_anti")
-        .persist()
     )
-    try:
+    with persisted(novel):
         merges = load_merge_list(spark, store_dir)
         got = collect_under_cap(novel)
         if got is not None:
@@ -272,8 +259,6 @@ def fertility_from_store(
         enc = encode_words(novel, merges).select("tok", "n_sym")
         out = fertility_report(docs, nsym.unionByName(enc))
         return local_rows_df(spark, out.collect(), out.schema)
-    finally:
-        novel.unpersist(blocking=False)
 
 
 def fertility_report(docs: DataFrame, nsym: DataFrame) -> DataFrame:

@@ -71,14 +71,18 @@ def tumbling_window_agg(
     events: DataFrame, width: str = "1 hour", watermark: str = "30 minutes"
 ) -> DataFrame:
     """Per event-type counts + value sums in tumbling event-time
-    windows. Batch-identical semantics: on a batch DataFrame the
-    watermark is a no-op."""
+    windows. The sum runs in DECIMAL(18,2) and is cast to double, so
+    it is exact and order-independent (st1's oracle formula).
+    Batch-identical semantics: on a batch DataFrame the watermark is a
+    no-op."""
     src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
         src.groupBy(F.window("ts", width).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sum_value"),
         )
         .select(
             F.col("win.start").alias("window_start"),

@@ -348,3 +348,36 @@ def test_docs_cite_existing_engine_names():
                 missing.append(f"{doc}: {m.group(0)}")
     assert checked, "no engine citations found"
     assert not missing, f"docs cite engine names that do not exist: {missing}"
+
+
+def _engine_attribute_uses(attr: str):
+    """(path below the package, line) of every ``.<attr>`` attribute
+    in the engine package's source.  No Spark session."""
+    import ast
+    import glob
+
+    root = os.path.join(REPO, _PKG)
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        rel = os.path.relpath(path, root)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == attr:
+                yield rel, node.lineno
+
+
+def test_materialized_state_has_one_owner():
+    """The Spark application id keys cached state only inside
+    ``sources/catalog.py`` (``cached_artifact``), and no builder under
+    ``plans/``, ``operators/`` or ``sources/`` releases a persisted
+    frame by hand: ``session.persisted`` owns every persist's release."""
+    app_ids = sorted(_engine_attribute_uses("applicationId"))
+    assert app_ids and all(
+        rel == os.path.join("sources", "catalog.py") for rel, _ in app_ids
+    ), f"applicationId outside sources/catalog.py: {app_ids}"
+    manual = [
+        (rel, line)
+        for rel, line in _engine_attribute_uses("unpersist")
+        if rel.split(os.sep)[0] in ("plans", "operators", "sources")
+    ]
+    assert not manual, f"hand-written unpersist calls: {manual}"

@@ -1,18 +1,29 @@
-"""r13 session helpers: Arrow-path local frames and scoped loop width.
+"""Session helpers: Arrow-path local frames, scoped loop width, the
+persist lifetime and the catalog's artifact cache.
 
 ``local_rows_df`` replaced every non-test ``createDataFrame(list)``
 call (21 sites) — these tests pin its VALUE fidelity against the
 default path (the optimization must be invisible to results), the
 exact-integer hazard it was designed around (no float64 promotion for
-long columns containing None), and ``bounded_loop_shuffle``'s
-restore-on-exit contract.
+long columns containing None), ``bounded_loop_shuffle``'s and
+``persisted``'s restore-on-exit contracts, and that
+``catalog.cached_artifact`` rebuilds a value when a table under its
+sf_dir is rewritten in place and serves a repeat lookup without a job.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
-from dww_data_pipeline_spark.session import bounded_loop_shuffle, local_rows_df
+from dww_data_pipeline_spark.session import (
+    bounded_loop_shuffle,
+    local_rows_df,
+    persisted,
+)
 
 
 class TestLocalRowsDf:
@@ -111,3 +122,81 @@ class TestBoundedLoopShuffle:
             pass
         assert spark.conf.get("spark.sql.shuffle.partitions") == cur
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+
+
+class TestPersisted:
+    def test_released_on_exit(self, spark):
+        df = spark.range(10)
+        with persisted(df) as got:
+            assert got is df and df.is_cached
+            assert got.count() == 10
+        assert not df.is_cached
+
+    def test_released_on_exception(self, spark):
+        df = spark.range(10)
+        with pytest.raises(RuntimeError):
+            with persisted(df):
+                raise RuntimeError("boom")
+        assert not df.is_cached
+
+
+def _jobs_under(spark, group: str, fn):
+    """``fn()`` and the ids of the Spark jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+class TestCachedArtifact:
+    @pytest.fixture
+    def sf_copy(self, sf_dir, tmp_path):
+        from dww_data_pipeline_spark.sources.catalog import TABLES
+
+        for name in TABLES:
+            shutil.copyfile(
+                os.path.join(sf_dir, f"{name}.parquet"),
+                tmp_path / f"{name}.parquet",
+            )
+        return str(tmp_path)
+
+    def test_hit_is_free_and_rewrite_rebuilds(self, spark, sf_copy):
+        import pyarrow.parquet as pq
+
+        from dww_data_pipeline_spark.plans.dedup_plans import (
+            d2_minhash_lsh_pairs,
+            lsh_pairs_cached,
+        )
+        from dww_data_pipeline_spark.sources.tokenizer_store import (
+            tokenizer_store_cached,
+        )
+
+        def lookup():
+            return (
+                lsh_pairs_cached(spark, sf_copy),
+                tokenizer_store_cached(spark, sf_copy),
+            )
+
+        (pairs, store), built = _jobs_under(spark, "artifact-cold", lookup)
+        assert built  # the job-group probe sees the builds
+        old_pairs = sorted(pairs.collect())
+
+        (pairs2, store2), jobs = _jobs_under(spark, "artifact-hit", lookup)
+        assert pairs2 is pairs and store2 == store
+        assert jobs == []
+
+        # rewrite one table in place under the same path
+        path = os.path.join(sf_copy, "documents.parquet")
+        docs = pq.read_table(path)
+        pq.write_table(docs.slice(0, docs.num_rows // 2), path)
+
+        (pairs3, store3), rebuilt = _jobs_under(spark, "artifact-stale", lookup)
+        assert rebuilt
+        got = sorted(pairs3.collect())
+        assert got == sorted(d2_minhash_lsh_pairs(spark, sf_copy).collect())
+        assert got != old_pairs
+        assert store3 != store and os.path.isdir(store3)
+        assert not os.path.exists(store)  # the superseded store is released
